@@ -104,6 +104,11 @@ def round6_portable(c: Column | str) -> Column:
     return F.floor(c * 1000000.0 + 0.5) / 1000000.0
 
 
+def r6_sql(expr: str) -> str:
+    """SQL oracle twin of :func:`round6_portable`."""
+    return f"FLOOR(({expr}) * 1000000.0 + 0.5) / 1000000.0"
+
+
 def dec_portable(c: Column | str, precision: int = 18, scale: int = 2) -> Column:
     """Portable double→DECIMAL(p,s) (r8 sweep, r7 verdict item #3):
     floor(x*10^s + 0.5)/10^s as a DOUBLE first — identical IEEE ops on

@@ -132,7 +132,6 @@ def materialize_edge_list(
     sf_dir: str,
     key: str,
     build,  # Callable[[SparkSession, str], DataFrame]
-    doc_scale: bool = False,
 ) -> DataFrame:
     """Build-once, reuse-everywhere edge list.
 
@@ -150,24 +149,12 @@ def materialize_edge_list(
     dropped checkpoint blocks. Entries from DEAD sessions are evicted
     on every call (their checkpoint blocks died with the executors),
     and the cache is capped at _EDGE_CACHE_MAX entries (oldest-first
-    eviction with an explicit unpersist) so long-lived sessions do not
-    pin checkpoint blocks forever (r6 ADVICE).
+    eviction; the ContextCleaner reclaims the evicted blocks) so
+    long-lived sessions do not pin checkpoint blocks forever (r6
+    ADVICE).
 
-    ``doc_scale=True`` marks seams whose row count grows with the
-    corpus (_corpus_sigs / _simhash_fps / cluster_labels — everything
-    else here is brand²-/calendar-/dimension-bounded). Size guard
-    (r12, r11 verdict "What's wrong" #2): the build output is
-    spread() to the session's default parallelism before the
-    checkpoint, so the pinned block set is partition-bounded instead
-    of single-split (MEMORY_AND_DISK blocks degrade rather than die,
-    but one corpus-sized block on one executor is strictly worse than
-    parallelism-many shards); and ``SPARK_GRAFT_SEAM_CHECKPOINT=off``
-    disables the checkpoint for doc-scale seams entirely — consumers
-    then recompute the subtree per reference (the pre-r11 behavior)
-    for deployments where pinning a corpus-scale table is worse than
-    recomputing it. Bounded seams are unaffected by both."""
-    import os
-
+    The build output is checkpointed as-is: a seam whose row count
+    grows with the corpus pins a corpus-sized block set."""
     app, start = _session_token(spark)
     # evict entries whose session is gone
     for k in [k for k in _EDGE_CACHE if (k[0], k[1]) != (app, start)]:

@@ -9,20 +9,19 @@ Two layers:
   version column, tie-broken on all non-key columns, so re-running the
   same batch is a no-op (the reference's ON DUPLICATE KEY contract).
 * :func:`merge_upsert` — the storage operation: read target parquet if
-  present, apply :func:`upsert_dataframe`, overwrite. On a Delta/Iceberg
-  deployment this would be ``MERGE INTO`` (jars not in this image —
-  gated behind an import-try in :func:`_try_delta_merge`); the
-  parquet path is the portable fallback.
+  present, apply :func:`upsert_dataframe`, write to a staging path and
+  swap it in crash-safely. On a Delta/Iceberg deployment this would be
+  ``MERGE INTO``; plain parquet is what this engine writes.
 
 Column-wise merge semantics: the reference's metric stages each upsert
 only *their* columns (wOBA, then wRC, then k/bb/babip …) into the same
 row. ``update_cols`` restricts the merge accordingly: unlisted columns
 keep the target's existing value when a key matches.
 
-Scale: the union+window dedup shuffles once on the key. For a 100 TB
-target this is exactly what Delta MERGE does under the hood minus the
-file-level pruning; partition the target (e.g. by game_date) so the
-overwrite touches only affected partitions (``partition_by``).
+Scale: the union+window dedup shuffles once on the key and rewrites
+the whole target. For a large partitioned target,
+:func:`merge_upsert_partitioned` reads and overwrites only the
+partitions the batch touches.
 """
 
 from __future__ import annotations
@@ -112,7 +111,6 @@ def merge_upsert(
     keys: Sequence[str],
     update_cols: Sequence[str] | None = None,
     version_col: str | None = None,
-    partition_by: Sequence[str] | None = None,
     version_wins: bool = False,
 ) -> None:
     """Merge ``updates`` into the parquet table at ``target_path``.
@@ -132,10 +130,6 @@ def merge_upsert(
       (``update_cols`` unsupported)."""
     if version_wins and update_cols is not None:
         raise ValueError("version_wins merges full rows; update_cols unsupported")
-    if not version_wins and _try_delta_merge(
-        spark, updates, target_path, keys, update_cols
-    ):
-        return
     _recover_backup(spark, target_path)
     # Existence is decided by the filesystem, not by catching read
     # errors: a blanket except would treat a corrupt footer or a
@@ -152,18 +146,12 @@ def merge_upsert(
         merged = upsert_dataframe(target, updates, keys, update_cols, version_col)
     # Parquet cannot overwrite a path that the merged plan still reads
     # lazily; stage to a sibling path and swap (distributed — no
-    # driver-side collect). Delta MERGE avoids the rewrite entirely.
+    # driver-side collect).
     if target is None:
-        writer = merged.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(target_path)
+        merged.write.mode("overwrite").parquet(target_path)
         return
     tmp_path = target_path.rstrip("/") + "__staging"
-    writer = merged.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp_path)
+    merged.write.mode("overwrite").parquet(tmp_path)
     _swap_paths(spark, tmp_path, target_path)
 
 
@@ -311,29 +299,3 @@ def _swap_paths(spark: SparkSession, src: str, dst: str) -> None:
         raise OSError(f"could not rename staging {src} into {dst}")
     fs.delete(bak_p, True)
 
-
-def _try_delta_merge(
-    spark: SparkSession,
-    updates: DataFrame,
-    target_path: str,
-    keys: Sequence[str],
-    update_cols: Sequence[str] | None,
-) -> bool:
-    """Use Delta Lake MERGE when the runtime has it (not in this image)."""
-    try:
-        from delta.tables import DeltaTable  # type: ignore
-    except ImportError:
-        return False
-    if not DeltaTable.isDeltaTable(spark, target_path):
-        return False
-    table = DeltaTable.forPath(spark, target_path)
-    cond = " AND ".join(f"t.{k} = u.{k}" for k in keys)
-    update_cols = update_cols or [c for c in updates.columns if c not in keys]
-    (
-        table.alias("t")
-        .merge(updates.alias("u"), cond)
-        .whenMatchedUpdate(set={c: f"u.{c}" for c in update_cols})
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
-    return True

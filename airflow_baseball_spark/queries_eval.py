@@ -196,6 +196,33 @@ registry.register(
 # ---------------------------------------------------------------------------
 
 
+def _purchase_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The signup→purchase survival cohort shared by kaplan_meier,
+    logrank_test, nelson_aalen and rmst_survival: one row per signed-up
+    user with ``d`` = days from first signup to first purchase, or to
+    the last event when the user never purchased (right-censored), and
+    ``is_event`` = 1 for a purchase, else 0 (never NULL, matching the
+    oracles' ``CASE … ELSE 0``)."""
+    ev = load_table(spark, sf_dir, "events")
+    per_user = ev.groupBy("user_id").agg(
+        F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).alias(
+            "t0"
+        ),
+        F.min(
+            F.when(F.col("event_type") == "purchase", F.col("ts"))
+        ).alias("tp"),
+        F.max("ts").alias("tlast"),
+    )
+    bought = F.col("tp") >= F.col("t0")
+    return per_user.filter(F.col("t0").isNotNull()).select(
+        "user_id",
+        F.when(bought, F.datediff(F.to_date("tp"), F.to_date("t0")))
+        .otherwise(F.datediff(F.to_date("tlast"), F.to_date("t0")))
+        .alias("d"),
+        F.when(bought, 1).otherwise(0).alias("is_event"),
+    )
+
+
 def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier estimate of "days from first signup to first
     purchase": users who never purchase are right-censored at their
@@ -211,28 +238,9 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     never ln(0)). The windows run on the distinct-duration-day table
     (≤ observation span in days), not on users or events.
     """
-    ev = load_table(spark, sf_dir, "events")
-    per_user = ev.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).alias(
-            "t0"
-        ),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("ts"))
-        ).alias("tp"),
-        F.max("ts").alias("tlast"),
-    )
-    cohort = per_user.filter(F.col("t0").isNotNull()).select(
-        F.when(
-            F.col("tp") >= F.col("t0"),
-            F.datediff(F.to_date("tp"), F.to_date("t0")),
-        )
-        .otherwise(F.datediff(F.to_date("tlast"), F.to_date("t0")))
-        .alias("d"),
-        ((F.col("tp") >= F.col("t0")).cast("int")).alias("is_event"),
-    )
+    cohort = _purchase_cohort(spark, sf_dir)
     per_d = cohort.groupBy("d").agg(
         F.sum("is_event").alias("n_ev"),
-        F.sum(F.lit(1) - F.col("is_event")).alias("n_cens"),
         F.count("*").alias("n_all"),
     )
     w_before = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, -1)
@@ -1712,27 +1720,9 @@ def q_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-risk counts come from per-arm cumulative windows over it."""
     from airflow_baseball_spark.operators.sampling import hash_unit
 
-    ev = load_table(spark, sf_dir, "events")
-    per_user = ev.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).alias(
-            "t0"
-        ),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("ts"))
-        ).alias("tp"),
-        F.max("ts").alias("tlast"),
-    )
-    cohort = per_user.filter(F.col("t0").isNotNull()).select(
-        F.when(
-            F.col("tp") >= F.col("t0"),
-            F.datediff(F.to_date("tp"), F.to_date("t0")),
-        )
-        .otherwise(F.datediff(F.to_date("tlast"), F.to_date("t0")))
-        .alias("d"),
-        ((F.col("tp") >= F.col("t0")).cast("int")).alias("is_event"),
-        F.when(hash_unit(F.col("user_id"), seed="ab") < 0.5, 0)
-        .otherwise(1)
-        .alias("arm"),
+    cohort = _purchase_cohort(spark, sf_dir).withColumn(
+        "arm",
+        F.when(hash_unit(F.col("user_id"), seed="ab") < 0.5, 0).otherwise(1),
     )
     per = cohort.groupBy("arm", "d").agg(
         F.sum("is_event").alias("n_ev"), F.count("*").alias("n_all")
@@ -3295,25 +3285,7 @@ def q_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     never overflows), making the running sums exact integers — the
     stricter cousin of kaplan_meier's ordered-ln-sum. The windows run
     on the distinct-duration-day table, not on users."""
-    ev = load_table(spark, sf_dir, "events")
-    per_user = ev.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).alias(
-            "t0"
-        ),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("ts"))
-        ).alias("tp"),
-        F.max("ts").alias("tlast"),
-    )
-    cohort = per_user.filter(F.col("t0").isNotNull()).select(
-        F.when(
-            F.col("tp") >= F.col("t0"),
-            F.datediff(F.to_date("tp"), F.to_date("t0")),
-        )
-        .otherwise(F.datediff(F.to_date("tlast"), F.to_date("t0")))
-        .alias("d"),
-        ((F.col("tp") >= F.col("t0")).cast("int")).alias("is_event"),
-    )
+    cohort = _purchase_cohort(spark, sf_dir)
     per_d = cohort.groupBy("d").agg(
         F.sum("is_event").alias("n_ev"),
         F.count("*").alias("n_all"),
@@ -4412,25 +4384,7 @@ def q_rmst_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     (quantize-before-sum over ~100 event days). All windows run on
     the distinct-duration-day table, never on users or events."""
     tau = 30
-    ev = load_table(spark, sf_dir, "events")
-    per_user = ev.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).alias(
-            "t0"
-        ),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("ts"))
-        ).alias("tp"),
-        F.max("ts").alias("tlast"),
-    )
-    cohort = per_user.filter(F.col("t0").isNotNull()).select(
-        F.when(
-            F.col("tp") >= F.col("t0"),
-            F.datediff(F.to_date("tp"), F.to_date("t0")),
-        )
-        .otherwise(F.datediff(F.to_date("tlast"), F.to_date("t0")))
-        .alias("d"),
-        ((F.col("tp") >= F.col("t0")).cast("int")).alias("is_event"),
-    )
+    cohort = _purchase_cohort(spark, sf_dir)
     per_d = cohort.groupBy("d").agg(
         F.sum("is_event").alias("n_ev"),
         F.count("*").alias("n_all"),

@@ -18,15 +18,10 @@ from pyspark.sql import functions as F
 from airflow_baseball_spark import registry
 from airflow_baseball_spark.functions.scalar import round6_portable as _r6
 from airflow_baseball_spark.schemas import load_table
-
-_TOKS = "string_split_regex(trim(text), '\\s+')"
-
-
-def _tokens(docs: DataFrame) -> DataFrame:
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    return docs.select("doc_id", "source", F.explode(toks).alias("w")).filter(
-        F.length("w") > 0
-    )
+from airflow_baseball_spark.text.analysis import (
+    TOKENS_SQL as _TOKS,
+    token_rows as _tokens,
+)
 
 
 # ---------------------------------------------------------------------------

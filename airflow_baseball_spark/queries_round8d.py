@@ -18,16 +18,12 @@ from pyspark.sql import functions as F
 
 from airflow_baseball_spark import registry
 from airflow_baseball_spark.functions.scalar import round6_portable as _r6
+from airflow_baseball_spark.functions.scalar import r6_sql as _r6_sql
 from airflow_baseball_spark.schemas import load_table
-
-_R6_SQL = "FLOOR(({expr}) * 1000000.0 + 0.5) / 1000000.0"
-
-
-def _r6_sql(expr: str) -> str:
-    return _R6_SQL.format(expr=expr)
-
-
-_TOKS = "string_split_regex(trim(text), '\\s+')"
+from airflow_baseball_spark.text.analysis import (
+    TOKENS_SQL as _TOKS,
+    token_rows as _tokens,
+)
 
 _TOK_CTE = f"""
     tok AS (
@@ -36,13 +32,6 @@ _TOK_CTE = f"""
       WHERE length(w) > 0
     )
 """
-
-
-def _tokens(docs: DataFrame) -> DataFrame:
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    return docs.select(
-        "doc_id", "source", F.explode(toks).alias("w")
-    ).filter(F.length("w") > 0)
 
 
 # ---------------------------------------------------------------------------

@@ -16,14 +16,8 @@ from pyspark.sql import functions as F
 
 from airflow_baseball_spark import registry
 from airflow_baseball_spark.functions.scalar import round6_portable as _r6
+from airflow_baseball_spark.functions.scalar import r6_sql as _r6_sql
 from airflow_baseball_spark.schemas import load_table
-
-_R6_SQL = "FLOOR(({expr}) * 1000000.0 + 0.5) / 1000000.0"
-
-
-def _r6_sql(expr: str) -> str:
-    return _R6_SQL.format(expr=expr)
-
 
 # ---------------------------------------------------------------------------
 # SQL-string API: correlated NOT EXISTS (inactive suppliers by nation)

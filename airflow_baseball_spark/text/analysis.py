@@ -12,7 +12,7 @@ never an engine's internal ``hash()``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Small in-expression stopword lists per language (public common words).
@@ -30,6 +30,17 @@ def tokens(text: Column) -> Column:
     """Whitespace tokenization (the baseline tokenizer; BPE-ish regex
     variant in :func:`bpe_ish_token_count`)."""
     return F.split(F.trim(text), r"\s+")
+
+
+# SQL oracle twin of :func:`tokens` over a ``text`` column.
+TOKENS_SQL = "string_split_regex(trim(text), '\\s+')"
+
+
+def token_rows(docs: DataFrame) -> DataFrame:
+    """One row per non-empty whitespace token: (doc_id, source, w)."""
+    return docs.select(
+        "doc_id", "source", F.explode(tokens(F.col("text"))).alias("w")
+    ).filter(F.length("w") > 0)
 
 
 def token_count(text: Column) -> Column:
@@ -161,7 +172,7 @@ def gopher_repetition(df, text_col: str = "text", id_col: str = "doc_id"):
     Thresholds (keep if dup_word_frac ≤ 0.3 and top_bigram_share ≤
     0.2) follow the published MassiveText cuts.
     """
-    from pyspark.sql import DataFrame, Window  # local: keep module header light
+    from pyspark.sql import Window  # local: keep module header light
     from airflow_baseball_spark.partitioning import spread
 
     toks_col = tokens(F.col(text_col))

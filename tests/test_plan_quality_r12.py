@@ -12,14 +12,6 @@ from tests.oracle_harness import plan_str
 SF = "/root/testdata/sf0.001"
 
 
-def _agg_keys(plan: str) -> list[str]:
-    """Normalized `Keys [...]` lines of every HashAggregate."""
-    return [
-        re.sub(r"#\d+", "", m)
-        for m in re.findall(r"Keys \[\d+\]: \[[^\]]*\]", plan)
-    ]
-
-
 def test_weighted_median_no_fact_grain_cents_aggregate(spark):
     """r12: the (flag, cents) aggregation must not run at fact grain —
     cents of l_extendedprice are nearly unique per row, so that

@@ -18,6 +18,13 @@ def test_priority_names_all_exist_in_registry():
     assert not missing, f"_PRIORITY entries not in registry: {missing}"
 
 
+def test_priority_is_exactly_the_driver_window():
+    """_PRIORITY declares the 50-slot driver window and nothing more;
+    queries past it follow registration order. A hand-ranked tail
+    re-grown behind the window fails here."""
+    assert len(registry._PRIORITY) == 50
+
+
 def test_priority_has_no_duplicates():
     seen: set[str] = set()
     dups = []

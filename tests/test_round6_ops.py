@@ -757,6 +757,64 @@ def test_nelson_aalen_monotone_cumulative(spark):
         assert r.n_ev <= r.n_risk
 
 
+def test_survival_counts_zero_events_on_all_censored_day(spark, tmp_path):
+    """A duration day on which every user is censored (no purchase)
+    has n_ev = 0, not NULL, matching the oracle's CASE … ELSE 0: the
+    cumulative hazard stays defined there and the survival curve
+    agrees with DuckDB row for row."""
+    from datetime import datetime, timedelta
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from airflow_baseball_spark import registry
+    from airflow_baseball_spark.queries_eval import (
+        q_kaplan_meier,
+        q_nelson_aalen,
+    )
+    from tests.oracle_harness import assert_match, duckdb_connect
+
+    day0 = datetime(2024, 1, 1, 9)
+    # (user, day, type): u1 purchases on day 2; u2 and u3 never do and
+    # are censored at their last event, on days 1 and 5
+    ev = [
+        (1, 0, "signup"), (1, 2, "purchase"),
+        (2, 0, "signup"), (2, 1, "view"),
+        (3, 0, "signup"), (3, 5, "view"),
+    ]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(len(ev)), pa.int64()),
+                "ts": pa.array(
+                    [day0 + timedelta(days=d) for _, d, _ in ev],
+                    pa.timestamp("us"),
+                ),
+                "user_id": pa.array([u for u, _, _ in ev], pa.int64()),
+                "event_type": [t for _, _, t in ev],
+                "value": pa.array([0.0] * len(ev), pa.float64()),
+                "props": ["{}"] * len(ev),
+            }
+        ),
+        tmp_path / "events.parquet",
+    )
+    sf = str(tmp_path)
+
+    rows = [
+        tuple(r)
+        for r in q_nelson_aalen(spark, sf).orderBy("d").collect()
+    ]
+    assert rows == [
+        (1, 0, 3, 0.0, 0.0),
+        (2, 1, 2, 0.5, 0.25),
+        (5, 0, 1, 0.5, 0.25),
+    ]
+    con = duckdb_connect(sf)
+    sqls = registry.oracle_sql(raw=True)
+    assert_match(q_nelson_aalen(spark, sf), con, sqls["nelson_aalen"])
+    assert_match(q_kaplan_meier(spark, sf), con, sqls["kaplan_meier"])
+
+
 def test_isotonic_fit_is_monotone_and_mean_preserving(spark):
     from airflow_baseball_spark.queries_eval import q_isotonic_calibration
 

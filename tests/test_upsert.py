@@ -104,39 +104,6 @@ def test_merge_upsert_read_errors_propagate(spark):
         assert open(f"{path}/part-00000.parquet", "rb").read().startswith(b"not a")
 
 
-def test_delta_gate_falls_back_cleanly_when_absent(spark):
-    """The MERGE fast path is gated on delta-spark; without it the
-    gate must return False (parquet fallback takes over) rather than
-    raise."""
-    import importlib.util
-
-    from airflow_baseball_spark.operators.upsert import _try_delta_merge
-
-    upd = spark.createDataFrame([(1, 1.0)], "id int, v double")
-    if importlib.util.find_spec("delta") is None:
-        assert _try_delta_merge(spark, upd, "/tmp/nonexistent_delta", ["id"], None) is False
-    else:  # pragma: no cover - image-dependent
-        pytest.skip("delta-spark present: MERGE path exercised via merge_upsert")
-
-
-@pytest.mark.skipif(
-    __import__("importlib.util", fromlist=["util"]).find_spec("delta") is None,
-    reason="delta-spark jars not in this image; Delta MERGE verified via "
-    "the same upsert_idempotent oracle when available",
-)
-def test_delta_merge_matches_parquet_fallback(spark):  # pragma: no cover
-    """When delta IS available, MERGE must satisfy the identical
-    contract the parquet fallback passes above."""
-    with tempfile.TemporaryDirectory() as d:
-        path = f"{d}/t"
-        base = spark.createDataFrame([(1, 1.0), (2, 2.0)], "id int, v double")
-        base.write.format("delta").save(path)
-        upd = spark.createDataFrame([(2, 9.0), (3, 3.0)], "id int, v double")
-        merge_upsert(spark, upd, path, keys=["id"])
-        out = _collect(spark.read.format("delta").load(path))
-        assert out == {(1, 1.0), (2, 9.0), (3, 3.0)}
-
-
 def test_empty_dir_target_treated_as_missing(spark):
     """A leftover empty directory (e.g. an interrupted first write)
     must count as "table missing" — the merge proceeds from the batch
