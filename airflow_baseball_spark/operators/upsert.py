@@ -18,6 +18,10 @@ only *their* columns (wOBA, then wRC, then k/bb/babip …) into the same
 row. ``update_cols`` restricts the merge accordingly: unlisted columns
 keep the target's existing value when a key matches.
 
+:func:`data_files` and the :data:`MARKER` helpers let a caller tell
+whether a table changed since it last merged into it (``jobs.run_stage``
+skips a merge whose inputs and target are unchanged).
+
 Scale: the union+window dedup shuffles once on the key and rewrites
 the whole target. For a large partitioned target,
 :func:`merge_upsert_partitioned` reads and overwrites only the
@@ -28,6 +32,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -217,31 +222,84 @@ def _fs_paths(spark: SparkSession, *paths: str):
     return (ps[0].getFileSystem(conf), *ps)
 
 
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    """True iff ``path`` holds a readable table: a file, or a directory
-    containing at least one visible data file (recursively, so
-    partitioned layouts count). A leftover EMPTY directory — e.g. from
-    an interrupted first write — is "missing", not "unreadable": a
-    bare ``fs.exists`` would send it down the read path and fail
-    schema inference forever until someone removed the dir by hand.
-    Genuinely unreadable data (corrupt footer, FS fault) still fails
-    loudly in the subsequent read."""
+def _visible(rel: str) -> bool:
+    """True iff no segment of the relative path ``rel`` starts with
+    ``_`` or ``.`` — the rule ``spark.read`` applies. A part file under
+    an interrupted write's ``_temporary/`` subtree, ``_SUCCESS``,
+    ``.crc`` checksums and the :func:`write_marker` file are all
+    invisible and never count as data."""
+    return all(not seg.startswith(("_", ".")) for seg in rel.split("/"))
+
+
+def _visible_files(spark: SparkSession, path: str):
+    """Yield the Hadoop ``FileStatus`` of every visible data file under
+    ``path`` (recursively, so partitioned layouts count; ``path`` itself
+    when it is a file). Yields nothing when ``path`` is missing."""
     fs, p = _fs_paths(spark, path)
     if not fs.exists(p):
-        return False
-    if fs.getFileStatus(p).isFile():
-        return True
+        return
     base = p.toUri().getPath().rstrip("/")
     it = fs.listFiles(p, True)
     while it.hasNext():
-        f = it.next().getPath().toUri().getPath()
-        # every path SEGMENT below the base must be visible: a part
-        # file under an interrupted write's _temporary/ subtree is
-        # invisible to spark.read and must not count as data
-        rel = f[len(base) :].lstrip("/")
-        if all(not seg.startswith(("_", ".")) for seg in rel.split("/")):
-            return True
-    return False
+        st = it.next()
+        if _visible(st.getPath().toUri().getPath()[len(base) :].lstrip("/")):
+            yield st
+
+
+def data_files(spark: SparkSession, path: str) -> list[tuple[str, int, int]]:
+    """Sorted ``(path, length, mtime_ms)`` of the visible data files of
+    the table at ``path`` (empty when it is missing) — a cheap version
+    stamp: any rewrite of the table changes it, since Spark names every
+    written part file afresh."""
+    return sorted(
+        (st.getPath().toUri().getPath(), st.getLen(), st.getModificationTime())
+        for st in _visible_files(spark, path)
+    )
+
+
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """True iff ``path`` holds a readable table: a file, or a directory
+    containing at least one visible data file. A leftover EMPTY
+    directory — e.g. from an interrupted first write — is "missing",
+    not "unreadable": a bare ``fs.exists`` would send it down the read
+    path and fail schema inference forever until someone removed the
+    dir by hand. Genuinely unreadable data (corrupt footer, FS fault)
+    still fails loudly in the subsequent read."""
+    return next(_visible_files(spark, path), None) is not None
+
+
+MARKER = "_stage_inputs"
+
+
+def read_marker(spark: SparkSession, table_path: str) -> str | None:
+    """The text of the table's :data:`MARKER` file, or None if it is
+    absent or unreadable. A crash inside :func:`write_marker` leaves a
+    truncated file; reading it as "no marker" costs one more merge,
+    where raising would fail every later call until the file is removed
+    by hand."""
+    fs, p = _fs_paths(spark, f"{table_path.rstrip('/')}/{MARKER}")
+    if not fs.exists(p):
+        return None
+    try:
+        stream = fs.open(p)
+        try:
+            return stream.readUTF()
+        finally:
+            stream.close()
+    except Py4JJavaError:
+        return None
+
+
+def write_marker(spark: SparkSession, table_path: str, text: str) -> None:
+    """Write ``text`` to the hidden :data:`MARKER` file inside the table
+    directory. ``spark.read`` ignores it, and any rewrite of the table
+    (:func:`_swap_paths`, an overwrite) removes it with the directory."""
+    fs, p = _fs_paths(spark, f"{table_path.rstrip('/')}/{MARKER}")
+    stream = fs.create(p, True)
+    try:
+        stream.writeUTF(text)
+    finally:
+        stream.close()
 
 
 def _backup_path(dst: str) -> str:

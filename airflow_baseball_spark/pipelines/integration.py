@@ -117,8 +117,14 @@ def recent_games(
     )
     if out_path is not None:
         # bounded partition count: bucket of the id, not the raw id —
-        # raw-id partitioning at 100 TB is a small-files explosion
-        top.withColumn("id_bucket", F.col(id_col) % 64).write.mode(
+        # raw-id partitioning at 100 TB is a small-files explosion. The
+        # export holds k rows per player, so its size follows the
+        # roster, never the fact table; each bucket directory costs
+        # file creation and a commit whatever it holds. Measured per
+        # role-night on 4 local cores: 64 buckets 1.05-1.14 s,
+        # 16 buckets 0.45-0.55 s, 4 buckets 0.30-0.35 s. 8 keeps most
+        # of the gain and still splits the export for parallel readers.
+        top.withColumn("id_bucket", F.col(id_col) % 8).write.mode(
             "overwrite"
         ).partitionBy("id_bucket").csv(out_path, header=True)
     return top

@@ -61,20 +61,24 @@ class Stage:
 
 # The G2 chain. Scrape stages (000/010/020/030/040/070) are ingestion
 # boundaries — the engine consumes their landed tables; compute stages
-# map to pipelines/ functions wired in run_chain.
+# map to pipelines/ functions wired in run_chain. ``inputs``/``outputs``
+# are load-bearing: ``jobs.run_stage`` fingerprints a keyed merge over
+# exactly the declared inputs and writes its one declared output, so a
+# table a stage reads but does not declare would let a stale merge be
+# skipped.
 STAGES: tuple[Stage, ...] = (
     Stage("land_game_records", "dags/000_scrape_games_result.py", (), ("game_records",), cron="0 20 * * *"),
     Stage("park_factor", "dags/001_park_factor_calculation.py", ("game_records",), ("park_factor",), after=("land_game_records",)),
     Stage("land_hitters", "dags/010_scrape_hitters_stats.py", (), ("hitters", "hitter_games", "hitter_opponents", "hitter_stadiums"), after=("park_factor",)),
-    Stage("hitter_woba", "dags/011_calculate_hitter_wOBA.py", ("hitters",), ("hitter_metrics",), after=("land_hitters",)),
-    Stage("hitter_wrc", "dags/012_calculate_hitter_wRC.py", ("hitters", "hitter_metrics"), ("hitter_metrics",), after=("hitter_woba",)),
-    Stage("hitter_rates", "dags/013_calculate_hitter_metrics.py", ("hitters",), ("hitter_metrics",), after=("hitter_wrc",)),
+    Stage("hitter_woba", "dags/011_calculate_hitter_wOBA.py", ("hitters", "game_records"), ("hitter_metrics",), after=("land_hitters",)),
+    Stage("hitter_wrc", "dags/012_calculate_hitter_wRC.py", ("hitters", "game_records"), ("hitter_metrics",), after=("hitter_woba",)),
+    Stage("hitter_rates", "dags/013_calculate_hitter_metrics.py", ("hitters", "game_records"), ("hitter_metrics",), after=("hitter_wrc",)),
     Stage("land_pitchers", "dags/020_scrape_pitchers_stats.py", (), ("pitchers", "pitcher_games", "pitcher_opponents", "pitcher_stadiums"), after=("hitter_rates",)),
     Stage("pitcher_metrics", "dags/021_calculate_pitcher_metrics.py", ("pitchers",), ("pitcher_metrics",), after=("land_pitchers",)),
     Stage("land_today_games", "dags/030_scrape_today_games_time.py", (), ("today_games",), after=("pitcher_metrics",)),
     Stage("schedule_lineup", "dags/031_schedule_dag_for_get_today_line_up.py", ("today_games",), (), after=("land_today_games",), event_time="game_time - 15min"),
     Stage("land_lineup", "dags/040_baseball_lineup_scraper.py", (), ("today_lineup",), after=("schedule_lineup",)),
-    Stage("park_adjusted", "dags/041_calculate_hitter_metrics_with_park_factor.py", ("today_lineup", "hitters", "hitter_metrics", "park_factor"), ("hitter_metrics",), after=("land_lineup",)),
+    Stage("park_adjusted", "dags/041_calculate_hitter_metrics_with_park_factor.py", ("today_lineup", "hitters", "hitter_metrics", "park_factor"), ("park_adjusted_metrics",), after=("land_lineup",)),
     Stage("hitter_records", "dags/050_insert_hitter_intergration_data.py", ("today_lineup", "hitters", "hitter_metrics", "hitter_opponents", "hitter_stadiums", "hitter_games"), ("hitter_records",), after=("park_adjusted",)),
     Stage("pitcher_records", "dags/060_insert_pitcher_integration_data.py", ("today_lineup", "pitchers", "pitcher_metrics", "pitcher_opponents", "pitcher_stadiums", "pitcher_games"), ("pitcher_records",), after=("hitter_records",)),
     Stage("land_five_innings", "dags/070_get_game_resulty.py", (), ("game_records_until_5_innings",), cron="50 14 * * *"),

@@ -4,6 +4,7 @@ role filters B5, top-5 recent games E1, partitioned CSV sink A10."""
 from __future__ import annotations
 
 import datetime
+import os
 import tempfile
 
 from pyspark.sql import functions as F
@@ -95,3 +96,20 @@ def test_recent_games_top5_and_sink(spark):
         assert dates[0] == datetime.date(2025, 5, 3)
         back = spark.read.csv(f"{d}/rg", header=True)
         assert back.count() == 12
+        # layout contract behind readers of <out>/*/*.csv: directories
+        # id_bucket=b with 0 <= b < 8, each id's rows only in id % 8
+        # (ids chosen so that a wider modulus would split them apart)
+        wide = spark.createDataFrame(
+            [(pid, datetime.date(2025, 5, 1), 0) for pid in (1, 9, 17, 66)],
+            "hitter_id int, game_date date, hits int",
+        )
+        recent_games(wide, role="hitter", k=5, out_path=f"{d}/wide")
+        placed = {}
+        for sub in sorted(os.listdir(f"{d}/wide")):
+            if sub.startswith(("_", ".")):
+                continue
+            name, _, b = sub.partition("=")
+            assert name == "id_bucket" and 0 <= int(b) < 8, sub
+            for r in spark.read.csv(f"{d}/wide/{sub}", header=True).collect():
+                placed.setdefault(int(r["hitter_id"]), set()).add(int(b))
+        assert placed == {pid: {pid % 8} for pid in (1, 9, 17, 66)}

@@ -97,3 +97,106 @@ def test_game_day_stages_run_end_to_end(spark, data_dir):
     # append semantics: a second run doubles the rows (reference A9)
     run_stage(spark, "hitter_records", data_dir)
     assert spark.read.parquet(f"{data_dir}/hitter_records").count() == 4
+
+
+def _spark_jobs(spark, fn):
+    """Run ``fn`` under its own job group; return (result, jobs launched)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test_jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count the jobs of one stage call")
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store is async
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(spark, path):
+    return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+
+def test_hitter_wrc_after_woba_launches_no_job(spark, data_dir, capsys):
+    run_stage(spark, "hitter_woba", data_dir)
+    before = _rows(spark, f"{data_dir}/hitter_metrics")
+    capsys.readouterr()
+    written, jobs = _spark_jobs(spark, lambda: run_stage(spark, "hitter_wrc", data_dir))
+    assert written == ["hitter_metrics"]
+    assert jobs == 0
+    assert _rows(spark, f"{data_dir}/hitter_metrics") == before
+    err = capsys.readouterr().err
+    assert "hitter_wrc" in err and f"{data_dir}/hitter_metrics" in err
+    assert "skipped" in err
+
+
+def test_changed_input_merges_again(spark, data_dir):
+    """game_records feeds wRC through the league run environment; a
+    stage that fingerprinted only ``hitters`` would keep the stale wRC."""
+    from airflow_baseball_spark.pipelines.hitter_metrics import (
+        hitter_metrics,
+        league_runs_from_games,
+    )
+
+    run_stage(spark, "hitter_woba", data_dir)
+    old = {r["hitter_id"]: r["wRC"] for r in spark.read.parquet(f"{data_dir}/hitter_metrics").collect()}
+    spark.createDataFrame(
+        [("A", 15, 3), ("A", 2, 2), ("B", 1, 0), ("C", 4, 6)],
+        "stadium string, home_score int, away_score int",
+    ).write.mode("overwrite").parquet(f"{data_dir}/game_records.parquet")
+    _, jobs = _spark_jobs(spark, lambda: run_stage(spark, "hitter_wrc", data_dir))
+    assert jobs > 0
+    games = spark.read.parquet(f"{data_dir}/game_records.parquet")
+    hitters = spark.read.parquet(f"{data_dir}/hitters.parquet")
+    want = {
+        r["hitter_id"]: r["wRC"]
+        for r in hitter_metrics(hitters, league_runs_from_games(games)).collect()
+    }
+    got = {r["hitter_id"]: r["wRC"] for r in spark.read.parquet(f"{data_dir}/hitter_metrics").collect()}
+    assert got == want
+    assert got != old
+
+
+def test_target_rewritten_behind_marker_merges_again(spark, data_dir):
+    from pyspark.sql import functions as F
+
+    from airflow_baseball_spark.operators.upsert import read_marker, write_marker
+
+    target = f"{data_dir}/hitter_metrics"
+    run_stage(spark, "hitter_woba", data_dir)
+    want = _rows(spark, target)
+    marker = read_marker(spark, target)
+    assert marker is not None
+    tampered = spark.createDataFrame(
+        spark.read.parquet(target).withColumn("wRC", F.lit(0.0)).collect(),
+        spark.read.parquet(target).schema,
+    )
+    tampered.write.mode("overwrite").parquet(target)
+    write_marker(spark, target, marker)  # the marker survives, the data moved
+    _, jobs = _spark_jobs(spark, lambda: run_stage(spark, "hitter_wrc", data_dir))
+    assert jobs > 0
+    assert _rows(spark, target) == want
+
+
+@pytest.mark.parametrize("damage", ["deleted", "truncated"])
+def test_remerge_without_marker_leaves_table_unchanged(spark, data_dir, damage):
+    """Merge re-run idempotence, and a marker cut short by a crash reads
+    as absent instead of failing every later call."""
+    import os
+
+    from airflow_baseball_spark.operators.upsert import MARKER, read_marker
+
+    target = f"{data_dir}/hitter_metrics"
+    run_stage(spark, "hitter_woba", data_dir)
+    before = _rows(spark, target)
+    for name in (MARKER, f".{MARKER}.crc"):
+        if os.path.exists(f"{target}/{name}"):
+            os.remove(f"{target}/{name}")
+    if damage == "truncated":
+        open(f"{target}/{MARKER}", "wb").close()
+    assert read_marker(spark, target) is None
+    _, jobs = _spark_jobs(spark, lambda: run_stage(spark, "hitter_rates", data_dir))
+    assert jobs > 0
+    assert _rows(spark, target) == before
+    assert read_marker(spark, target) is not None

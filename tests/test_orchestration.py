@@ -69,3 +69,14 @@ def test_airflow_dag_graph_matches_stages():
         (t.task_id, down) for t in dag.tasks for down in t.downstream_task_ids
     }
     assert got_edges == want_edges
+
+
+def test_stage_declarations_match_what_jobs_reads_and_writes():
+    """jobs.run_stage fingerprints a keyed merge over the declared
+    inputs and writes the one declared output."""
+    by = {s.name: s for s in orch.STAGES}
+    for name in ("hitter_woba", "hitter_wrc", "hitter_rates"):
+        assert set(by[name].inputs) == {"hitters", "game_records"}
+        assert by[name].outputs == ("hitter_metrics",)
+    assert by["pitcher_metrics"].outputs == ("pitcher_metrics",)
+    assert by["park_adjusted"].outputs == ("park_adjusted_metrics",)
