@@ -6,7 +6,6 @@ from airflow_baseball_spark.functions.scalar import (
     game_sign,
     ip_to_float,
     parse_game_datetime,
-    parse_matchup,
     parse_score_bundle,
     sentinel_to_double,
 )
@@ -15,7 +14,6 @@ __all__ = [
     "game_sign",
     "ip_to_float",
     "parse_game_datetime",
-    "parse_matchup",
     "parse_score_bundle",
     "sentinel_to_double",
 ]

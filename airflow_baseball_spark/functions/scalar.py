@@ -33,15 +33,6 @@ def score_bundle_filter(col: Column) -> Column:
     return col.rlike(_SCORE_RE)
 
 
-# F2 — matchup split (dags/030_scrape_today_games_time.py:22-27):
-# "롯데vs삼성" → (away, home).
-def parse_matchup(col: Column) -> tuple[Column, Column]:
-    return (
-        F.regexp_extract(col, r"^(.+?)vs(.+)$", 1).alias("away_team"),
-        F.regexp_extract(col, r"^(.+?)vs(.+)$", 2).alias("home_team"),
-    )
-
-
 # F3 — datetime build (dags/000_scrape_games_result.py:31-36): strip the
 # Korean weekday suffix "(월)"… then parse "MM.DD" + "HH:MM" with an
 # explicit year (the reference injects datetime.now().year — a latent

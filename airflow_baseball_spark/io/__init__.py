@@ -2,20 +2,12 @@
 
 The reference's I/O surface — MySQL scans (A7), keyed upserts (A8),
 plain appends (A9), per-player CSV exports (A10), drop/recreate DDL
-(A11) — re-expressed as schema-enforced Spark readers and partitioned
-writers. Upsert semantics live in ``operators.upsert`` (the engine-side
-MERGE); everything here is format plumbing.
+(A11) — re-expressed as schema-enforced Spark readers and a partitioned
+CSV writer. Upsert semantics live in ``operators.upsert`` (the
+engine-side MERGE); the A9 append and A11 overwrite are plain
+``df.write`` calls in ``jobs.run_stage``; everything here is format
+plumbing.
 """
 
-from airflow_baseball_spark.io.readers import (  # noqa: F401
-    read_csv,
-    read_jdbc_partitioned,
-    read_json,
-    read_parquet,
-)
-from airflow_baseball_spark.io.writers import (  # noqa: F401
-    export_csv_partitioned,
-    write_append,
-    write_overwrite,
-    write_partitioned,
-)
+from airflow_baseball_spark.io.readers import read_csv, read_json  # noqa: F401
+from airflow_baseball_spark.io.writers import export_csv_partitioned  # noqa: F401

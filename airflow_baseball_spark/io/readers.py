@@ -4,11 +4,8 @@ an explicit ``StructType`` (the engine's analog of the reference's DDL
 malformed rows FAIL FAST rather than silently nulling — the reference's
 ``int()``/``str_to_float()`` casts raised on bad data too.
 
-Scale notes: parquet scans get Catalyst column pruning + predicate
-pushdown for free; CSV/JSON scans are splittable (uncompressed / bzip2)
-so they parallelize by HDFS block; the JDBC reader shards the scan on a
-numeric column exactly like the reference's 5-way player-id range
-fan-out (`dags/010_scrape_hitters_stats.py:254-269` — G4).
+Scale notes: CSV/JSON scans are splittable (uncompressed / bzip2) so
+they parallelize by HDFS block.
 """
 
 from __future__ import annotations
@@ -17,77 +14,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def read_parquet(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    columns: list[str] | None = None,
-) -> DataFrame:
-    """Parquet scan; pass ``columns`` to prune at the reader (Catalyst
-    also prunes from downstream selects — this is for API explicitness)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.parquet(path)
-    return df.select(*columns) if columns else df
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    header: bool = True,
-    sep: str = ",",
-    mode: str = "FAILFAST",
-    **options: str,
-) -> DataFrame:
+def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """Comma-separated files with a header row."""
     return (
         spark.read.schema(schema)
-        .option("header", str(header).lower())
-        .option("sep", sep)
-        .option("mode", mode)
-        .options(**options)
+        .option("header", "true")
+        .option("mode", "FAILFAST")
         .csv(path)
     )
 
 
-def read_json(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    mode: str = "FAILFAST",
-    **options: str,
-) -> DataFrame:
-    return (
-        spark.read.schema(schema).option("mode", mode).options(**options).json(path)
-    )
-
-
-def read_jdbc_partitioned(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    partition_column: str,
-    lower_bound: int,
-    upper_bound: int,
-    num_partitions: int = 8,
-    fetch_size: int = 10_000,
-    **properties: str,
-) -> DataFrame:
-    """Sharded JDBC scan — one task per ``partition_column`` stripe,
-    replacing the reference's manual 5-task Celery fan-out over player-id
-    ranges. Requires a JDBC driver jar on the classpath (none ships in
-    this container; the call is format plumbing, exercised against
-    parquet-backed fakes in tests)."""
-    return (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("partitionColumn", partition_column)
-        .option("lowerBound", str(lower_bound))
-        .option("upperBound", str(upper_bound))
-        .option("numPartitions", str(num_partitions))
-        .option("fetchsize", str(fetch_size))
-        .options(**properties)
-        .load()
-    )
+def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    return spark.read.schema(schema).option("mode", "FAILFAST").json(path)

@@ -1,18 +1,14 @@
-"""Sinks. The reference's write modes, set-based:
+"""Sinks. The reference's per-player CSV side files (A10,
+`dags/050_insert_hitter_intergration_data.py:124-127`) →
+``export_csv_partitioned`` — ONE partitioned write replaces the
+reference's per-player loop; the file path becomes derivable from the
+partition columns instead of a stored TEXT column.
 
-* append (A9 plain inserts) → ``write_append``
-* drop/recreate per run (A11, `dags/030_scrape_today_games_time.py:44-56`)
-  → ``write_overwrite``
-* per-player CSV side files (A10,
-  `dags/050_insert_hitter_intergration_data.py:124-127`) →
-  ``export_csv_partitioned`` — ONE partitioned write replaces the
-  reference's per-player loop; the file path becomes derivable from the
-  partition columns instead of a stored TEXT column
-* keyed upsert (A8) → ``operators.upsert.merge_upsert``
-
-Scale: always partition fact sinks by a pruning column (game_date) so
-downstream scans prune and incremental overwrites are partition-local
-(``spark.sql.sources.partitionOverwriteMode=dynamic``).
+The other write modes need no helper: the A9 append (the records
+tables) and the A11 drop/recreate (``park_factor``,
+`dags/001_park_factor_calculation.py:20-34`) are ``df.write`` calls in
+``jobs.run_stage``, and the A8 keyed upsert is
+``operators.upsert.merge_upsert``.
 """
 
 from __future__ import annotations
@@ -22,43 +18,11 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 
 
-def write_append(df: DataFrame, path: str, fmt: str = "parquet") -> None:
-    df.write.format(fmt).mode("append").save(path)
-
-
-def write_overwrite(df: DataFrame, path: str, fmt: str = "parquet") -> None:
-    df.write.format(fmt).mode("overwrite").save(path)
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: Sequence[str],
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-    dynamic: bool = True,
-) -> None:
-    """Partitioned sink; ``dynamic=True`` overwrites only the partitions
-    present in ``df`` (incremental daily runs don't clobber history)."""
-    writer = df.write.format(fmt).mode(mode).partitionBy(*partition_cols)
-    if dynamic and mode == "overwrite":
-        writer = writer.option("partitionOverwriteMode", "dynamic")
-    writer.save(path)
-
-
 def export_csv_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: Sequence[str],
-    header: bool = True,
+    df: DataFrame, path: str, partition_cols: Sequence[str]
 ) -> None:
-    """The A10 CSV export as a single distributed write:
-    ``path/<col>=<val>/…/part-*.csv`` — the reference's
-    ``data/{role}/{game_date}/{id}.csv`` layout, derivable from
-    partition values (no recorded path column needed)."""
-    (
-        df.write.mode("overwrite")
-        .partitionBy(*partition_cols)
-        .option("header", str(header).lower())
-        .csv(path)
-    )
+    """The A10 CSV export as a single distributed write, overwriting
+    ``path``: ``path/<col>=<val>/…/part-*.csv`` with a header row — the
+    reference's ``data/{role}/{game_date}/{id}.csv`` layout, derivable
+    from partition values."""
+    df.write.mode("overwrite").partitionBy(*partition_cols).csv(path, header=True)

@@ -5,7 +5,7 @@ Each Airflow task (or a cron shell, or an operator-less smoke run)
 invokes one reference DAG stage:
 
     python -m airflow_baseball_spark.jobs --stage park_factor \
-        --data-dir /data/tables [--out-dir DIR] [--run-date YYYY-MM-DD]
+        --data-dir /data/tables [--out-dir DIR]
 
 Input tables are ``<data-dir>/<table>.parquet``; outputs land under
 ``<out-dir>`` (default: data-dir) with the reference's write semantics
@@ -138,7 +138,6 @@ def run_stage(
     stage: str,
     data_dir: str,
     out_dir: str | None = None,
-    run_date: str | None = None,
 ) -> list[str]:
     """Execute one stage; returns the list of tables written (empty for
     validation-only stages). Raises on unknown stages or missing landed
@@ -189,7 +188,13 @@ def run_stage(
         )
     if stage in ("hitter_records", "pitcher_records"):
         role = stage.split("_")[0]
-        rec = integration_records(
+        # the export is an idempotent overwrite and the append is not:
+        # export first, so a failed export leaves the records untouched
+        # and a retry appends the night once
+        recent_games(
+            t(f"{role}_games"), role, out_path=f"{out}/recent_games/{role}"
+        )
+        integration_records(
             t("today_lineup"),
             t(f"{role}s"),
             spark.read.parquet(f"{out}/{role}_metrics"),
@@ -197,11 +202,7 @@ def run_stage(
             t(f"{role}_stadiums"),
             role=role,
             recent_games_root=f"{out}/recent_games",
-        )
-        rec.write.mode("append").parquet(f"{out}/{stage}")
-        recent_games(
-            t(f"{role}_games"), role, out_path=f"{out}/recent_games/{role}"
-        )
+        ).write.mode("append").parquet(f"{out}/{stage}")
         return [stage, f"recent_games/{role}"]
     known = ", ".join(s.name for s in STAGES)
     raise ValueError(f"unknown stage {stage!r}; expected one of: {known}")
@@ -214,10 +215,9 @@ def main(argv: Sequence[str] | None = None) -> int:
     p.add_argument("--stage", required=True)
     p.add_argument("--data-dir", required=True)
     p.add_argument("--out-dir", default=None)
-    p.add_argument("--run-date", default=None)
     args = p.parse_args(argv)
     spark = get_spark(app_name=f"stage_{args.stage}")
-    written = run_stage(spark, args.stage, args.data_dir, args.out_dir, args.run_date)
+    written = run_stage(spark, args.stage, args.data_dir, args.out_dir)
     print(f"{args.stage}: wrote {written or 'nothing (validation stage)'}")
     return 0
 

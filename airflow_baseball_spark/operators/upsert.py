@@ -9,14 +9,19 @@ Two layers:
   version column, tie-broken on all non-key columns, so re-running the
   same batch is a no-op (the reference's ON DUPLICATE KEY contract).
 * :func:`merge_upsert` — the storage operation: read target parquet if
-  present, apply :func:`upsert_dataframe`, write to a staging path and
-  swap it in crash-safely. On a Delta/Iceberg deployment this would be
+  present, merge the batch into it, write to a staging path and swap it
+  in crash-safely. On a Delta/Iceberg deployment this would be
   ``MERGE INTO``; plain parquet is what this engine writes.
+
+One version rule: with a ``version_col``, :func:`merge_upsert` keeps the
+highest version per key across the stored rows and the batch; without
+one, the batch replaces the stored row.
 
 Column-wise merge semantics: the reference's metric stages each upsert
 only *their* columns (wOBA, then wRC, then k/bb/babip …) into the same
-row. ``update_cols`` restricts the merge accordingly: unlisted columns
-keep the target's existing value when a key matches.
+row. :func:`upsert_dataframe`'s ``update_cols`` restricts the merge
+accordingly: unlisted columns keep the target's existing value when a
+key matches.
 
 :func:`data_files` and the :data:`MARKER` helpers let a caller tell
 whether a table changed since it last merged into it (``jobs.run_stage``
@@ -114,27 +119,22 @@ def merge_upsert(
     updates: DataFrame,
     target_path: str,
     keys: Sequence[str],
-    update_cols: Sequence[str] | None = None,
     version_col: str | None = None,
-    version_wins: bool = False,
 ) -> None:
     """Merge ``updates`` into the parquet table at ``target_path``.
 
     Two matched-key semantics:
 
-    * ``version_wins=False`` (default): the updates batch replaces the
-      stored row unconditionally — MySQL ON DUPLICATE KEY UPDATE
-      parity (`dags/utils/queries.py:5-261`), where "latest" means
-      "the batch being applied".
-    * ``version_wins=True``: keep the row with the highest
-      ``version_col`` across BOTH the stored table and the batch (same
-      total order as :func:`_dedup_latest`). This is the CDC-apply
-      contract: out-of-order batches cannot regress a newer stored
-      row, and the merge is associative across any batch slicing.
-      Requires ``updates`` to carry the full row schema
-      (``update_cols`` unsupported)."""
-    if version_wins and update_cols is not None:
-        raise ValueError("version_wins merges full rows; update_cols unsupported")
+    * no ``version_col``: the updates batch replaces the stored row
+      unconditionally — MySQL ON DUPLICATE KEY UPDATE parity
+      (`dags/utils/queries.py:5-261`), where "latest" means "the batch
+      being applied".
+    * ``version_col`` given: keep the row with the highest version
+      across BOTH the stored table and the batch (same total order as
+      :func:`_dedup_latest`). This is the CDC-apply contract:
+      out-of-order batches cannot regress a newer stored row, and the
+      merge is associative across any batch slicing. ``updates``
+      carries the full row schema."""
     _recover_backup(spark, target_path)
     # Existence is decided by the filesystem, not by catching read
     # errors: a blanket except would treat a corrupt footer or a
@@ -144,11 +144,11 @@ def merge_upsert(
         target = spark.read.parquet(target_path)
     else:
         target = None
-    if version_wins:
+    if version_col is not None:
         both = updates if target is None else target.unionByName(updates)
         merged = _dedup_latest(both, list(keys), version_col)
     else:
-        merged = upsert_dataframe(target, updates, keys, update_cols, version_col)
+        merged = upsert_dataframe(target, updates, keys)
     # Parquet cannot overwrite a path that the merged plan still reads
     # lazily; stage to a sibling path and swap (distributed — no
     # driver-side collect).
@@ -166,8 +166,6 @@ def merge_upsert_partitioned(
     target_path: str,
     keys: Sequence[str],
     partition_col: str,
-    update_cols: Sequence[str] | None = None,
-    version_col: str | None = None,
 ) -> list:
     """Partition-pruned upsert — the 100 TB shape of :func:`merge_upsert`.
 
@@ -200,9 +198,7 @@ def merge_upsert_partitioned(
         )
     else:
         target = None
-    merged = upsert_dataframe(
-        target, updates, keys, update_cols, version_col
-    ).localCheckpoint()
+    merged = upsert_dataframe(target, updates, keys).localCheckpoint()
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:

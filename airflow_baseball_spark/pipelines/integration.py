@@ -13,9 +13,10 @@ the whole stage is one job per role:
 * C2 left join to metrics — missing → NULL metric columns;
 * C3/C4 left joins to opponent/stadium splits, stat columns prefixed
   ``opponent_`` / ``stadium_`` per the reference layout;
-* E1 windowed top-5 recent games written once, partitioned — replacing
-  the per-player CSV loop (A10); the derivable path is recorded in
-  ``recent_games_file_path`` for surface parity.
+* E1 windowed top-5 recent games written once, partitioned by id
+  bucket — replacing the per-player CSV loop (A10); the directory that
+  holds each player's rows is recorded in ``recent_games_file_path``
+  for surface parity.
 
 All dims (masters, metrics, splits at reference scale) broadcast; the
 only shuffle is the recent-games window, keyed the same as a bucketed
@@ -27,7 +28,22 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from airflow_baseball_spark.io.writers import export_csv_partitioned
 from airflow_baseball_spark.operators.topk import top_k_per_key
+
+
+def _id_bucket(id_col: str) -> Column:
+    """The recent-games export's partition value for a player id.
+
+    Bounded partition count: bucket of the id, not the raw id — raw-id
+    partitioning at 100 TB is a small-files explosion. The export holds
+    k rows per player, so its size follows the roster, never the fact
+    table; each bucket directory costs file creation and a commit
+    whatever it holds. Measured per role-night on 4 local cores: 64
+    buckets 1.05-1.14 s, 16 buckets 0.45-0.55 s, 4 buckets 0.30-0.35 s.
+    8 keeps most of the gain and still splits the export for parallel
+    readers."""
+    return F.col(id_col) % 8
 
 
 def _prefixed(df: DataFrame, keys: list[str], prefix: str) -> DataFrame:
@@ -88,16 +104,14 @@ def integration_records(
         )
         .drop("__opp_id", "__opp_team", "__std_id", "__std_stadium")
     )
-    # recent_games_file_path: derivable from the partitioned write layout
-    # (A10) — kept as a column for reference-surface parity (0_init:388).
+    # recent_games_file_path: the export directory holding this id's
+    # rows (A10) — kept as a column for reference-surface parity
+    # (0_init:388).
     return joined.withColumn(
         "recent_games_file_path",
         F.concat(
-            F.lit(f"{recent_games_root}/{role}/"),
-            F.date_format("game_date", "yyyy-MM-dd"),
-            F.lit("/"),
-            F.col(id_col).cast("string"),
-            F.lit(".csv"),
+            F.lit(f"{recent_games_root}/{role}/id_bucket="),
+            _id_bucket(id_col).cast("string"),
         ),
     )
 
@@ -116,15 +130,7 @@ def recent_games(
         k=k,
     )
     if out_path is not None:
-        # bounded partition count: bucket of the id, not the raw id —
-        # raw-id partitioning at 100 TB is a small-files explosion. The
-        # export holds k rows per player, so its size follows the
-        # roster, never the fact table; each bucket directory costs
-        # file creation and a commit whatever it holds. Measured per
-        # role-night on 4 local cores: 64 buckets 1.05-1.14 s,
-        # 16 buckets 0.45-0.55 s, 4 buckets 0.30-0.35 s. 8 keeps most
-        # of the gain and still splits the export for parallel readers.
-        top.withColumn("id_bucket", F.col(id_col) % 8).write.mode(
-            "overwrite"
-        ).partitionBy("id_bucket").csv(out_path, header=True)
+        export_csv_partitioned(
+            top.withColumn("id_bucket", _id_bucket(id_col)), out_path, ["id_bucket"]
+        )
     return top

@@ -1,4 +1,4 @@
-"""Orchestration — the reference's DAG topology as data + runners.
+"""Orchestration — the reference's DAG topology as data.
 
 The reference chains 14 DAGs with ``TriggerDagRunOperator``
 (`dags/000_scrape_games_result.py:147-153` …, SURVEY.md §2 G2):
@@ -10,40 +10,25 @@ plus two cron roots (000 daily 20:00, 070 daily 14:50 — G1) and one
 data-driven trigger (031 schedules 040 from ``today_games.game_date`` —
 G3). Here that topology is:
 
-* ``STAGES`` / ``CHAIN`` — the dependency graph as plain data, each
-  stage a pure ``(spark, tables, run_date) → {table: DataFrame}``
-  function from ``pipelines``;
-* :func:`run_chain` — in-process sequential runner (stages fuse into
-  one Spark application; each stage's outputs feed the next — what a
-  single ``spark-submit`` of the whole nightly batch does);
+* ``STAGES`` — the dependency graph as plain data: each stage's
+  reference DAG, its input and output tables and its upstream stages;
+  ``jobs.run_stage`` executes one stage;
+* :func:`event_time_triggers` — the G3 trigger as an engine operator;
 * :func:`build_airflow_dag` — the thin Airflow wrapper, gated behind an
-  import-try (Airflow isn't in this container): one ``spark-submit``
-  task per stage with the same dependency edges, cron on the root, and
-  the G3 event-time trigger expressed as a sensor-deferred schedule.
+  import-try (Airflow isn't in this container): one ``jobs`` CLI task
+  per stage with the same dependency edges and cron on the root.
 
-Scheduling semantics preserved: ``run_date`` is an explicit parameter
-everywhere (the reference's KST ``execution_date + 9h``,
-`dags/030_scrape_today_games_time.py:128-131`, becomes a pure input —
-no wall-clock reads inside the engine).
+The trigger's clock is an explicit ``run_ts`` (the reference's KST
+``execution_date + 9h``, `dags/030_scrape_today_games_time.py:128-131`,
+becomes a pure input — no wall-clock reads inside the engine).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Mapping
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from airflow_baseball_spark.pipelines.hitter_metrics import (
-    hitter_metrics,
-    league_runs_from_games,
-    park_adjusted_metrics,
-)
-from airflow_baseball_spark.pipelines.park_factor import park_factor
-from airflow_baseball_spark.pipelines.pitcher_metrics import pitcher_metrics
-
-StageFn = Callable[..., Mapping[str, DataFrame]]
 
 
 @dataclass(frozen=True)
@@ -61,7 +46,7 @@ class Stage:
 
 # The G2 chain. Scrape stages (000/010/020/030/040/070) are ingestion
 # boundaries — the engine consumes their landed tables; compute stages
-# map to pipelines/ functions wired in run_chain. ``inputs``/``outputs``
+# map to pipelines/ functions wired in jobs.run_stage. ``inputs``/``outputs``
 # are load-bearing: ``jobs.run_stage`` fingerprints a keyed merge over
 # exactly the declared inputs and writes its one declared output, so a
 # table a stage reads but does not declare would let a stale merge be
@@ -104,30 +89,6 @@ def validate_chain(stages: tuple[Stage, ...] = STAGES) -> None:
         seen.add(s.name)
 
 
-def run_chain(
-    spark: SparkSession,
-    tables: dict[str, DataFrame],
-    run_date: str | None = None,
-) -> dict[str, DataFrame]:
-    """Execute the compute stages in chain order against landed tables
-    (``tables`` holds the ingestion outputs: game_records, hitters,
-    pitchers, today_lineup, …). Returns the derived tables. Pure — no
-    writes; callers pick sinks (``io.writers`` / ``operators.upsert``)."""
-    validate_chain()
-    out: dict[str, DataFrame] = {}
-    out["park_factor"] = park_factor(tables["game_records"])
-    hm = hitter_metrics(
-        tables["hitters"], league_runs_from_games(tables["game_records"])
-    )
-    out["hitter_metrics"] = hm
-    out["pitcher_metrics"] = pitcher_metrics(tables["pitchers"])
-    if "today_lineup" in tables:
-        out["park_adjusted_metrics"] = park_adjusted_metrics(
-            tables["today_lineup"], tables["hitters"], hm, out["park_factor"]
-        )
-    return out
-
-
 def event_time_triggers(
     today_games: DataFrame,
     run_ts: str,
@@ -148,8 +109,7 @@ def event_time_triggers(
 
     Scale: ``today_games`` is one day's schedule (tiny); the distinct
     and anti-join are broadcast-sized. ``run_ts`` is an explicit
-    parameter — no wall-clock reads inside the engine (same convention
-    as ``run_date`` in :func:`run_chain`)."""
+    parameter — no wall-clock reads inside the engine."""
     trig = (
         today_games.select(
             (
@@ -180,8 +140,9 @@ def build_airflow_dag(
         from airflow.operators.bash import BashOperator  # noqa: PLC0415
     except ImportError as exc:  # pragma: no cover - env-dependent
         raise NotImplementedError(
-            "apache-airflow is not installed; the chain runs in-process "
-            "via run_chain(), or deploy this factory where Airflow exists"
+            "apache-airflow is not installed; run stages with the "
+            "airflow_baseball_spark.jobs CLI, or deploy this factory where "
+            "Airflow exists"
         ) from exc
 
     validate_chain()
@@ -196,8 +157,7 @@ def build_airflow_dag(
             # `spark-submit --master yarn ...` in that deployment
             bash_command=(
                 "python -m airflow_baseball_spark.jobs "
-                f"--stage {s.name} --data-dir {data_dir} "
-                "--run-date {{ ds }}"
+                f"--stage {s.name} --data-dir {data_dir}"
             ),
             dag=dag,
         )

@@ -314,7 +314,7 @@ registry.register(
     )
     SELECT m.hitter_id, l.position, metrics.wOBA,
            o.opponent_avg, s.stadium_avg,
-           '/data/hitter/2025-05-21/' || CAST(m.hitter_id AS VARCHAR) || '.csv'
+           '/data/hitter/id_bucket=' || CAST(m.hitter_id % 8 AS VARCHAR)
              AS recent_games_file_path
     FROM lineup l
     JOIN master m ON l.player = m.player_name AND l.team = m.team_name

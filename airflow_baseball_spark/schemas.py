@@ -25,20 +25,6 @@ from pyspark.sql import types as T
 # Testdata (TPC-H-ish) tables — TESTDATA.md
 # ---------------------------------------------------------------------------
 
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 _TZ_WARNED: dict[str, bool] = {}
 
 # r11 (optimization): session-keyed memo of the ANALYZED lazy reader
@@ -173,17 +159,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 df = df.withColumn(c, F.col(c).cast("timestamp"))
     _READER_MEMO[token] = df
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Read every testdata table; also registers each as a temp view so
-    ``spark.sql`` phrasings can be used interchangeably."""
-    out: dict[str, DataFrame] = {}
-    for name in TESTDATA_TABLES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -468,7 +468,7 @@ def run_stream_upsert_available_now(
     (`dags/utils/queries.py:5-261`), keeping the LATEST event per
     ``user_id`` (version = event time).
 
-    ``version_wins=True`` is what makes batching irrelevant: the merge
+    ``version_col="ts"`` is what makes batching irrelevant: the merge
     keeps the highest-``ts`` row across the STORED table and the batch
     (not "the batch wins"), so keep-latest is associative and an
     out-of-order micro-batch can never regress a newer stored row —
@@ -488,7 +488,6 @@ def run_stream_upsert_available_now(
             target,
             keys=["user_id"],
             version_col="ts",
-            version_wins=True,
         )
 
     q = (

@@ -66,15 +66,6 @@ _PERMS: list[tuple[int, int]] = [
 N_BANDS = 4
 
 
-def shingle_code(sh: Column) -> Column:
-    """Deterministic integer code of a 5-char shingle: unrolled
-    polynomial over char codes (no engine-internal hash())."""
-    code = F.ascii(F.substring(sh, 1, 1)).cast("long")
-    for i in range(2, 6):
-        code = code * 31 + F.ascii(F.substring(sh, i, 1)).cast("long")
-    return code
-
-
 def shingles(df: DataFrame, text_col: str, id_col: str, n: int = 5) -> DataFrame:
     """(id, shingle) rows — distinct character n-grams per document."""
     pos = F.explode(
@@ -221,16 +212,6 @@ def lsh_candidate_edges(
         .select(F.col("hub").alias("id_a"), F.col(id_col).alias("id_b"))
         .distinct()
     )
-
-
-def minhash_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Documents to DROP: any doc LSH-paired with a lower-id doc.
-    (Single-link transitive closure would iterate pair → min-id
-    propagation to fixpoint; one round is the standard first pass.)"""
-    pairs = lsh_candidate_pairs(minhash_signatures(df, text_col, id_col), id_col)
-    return pairs.select(F.col("id_b").alias("drop_id")).distinct()
 
 
 # ---------------------------------------------------------------------------

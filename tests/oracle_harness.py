@@ -6,6 +6,7 @@ brief). Used by tests to catch mismatches before the driver does."""
 from __future__ import annotations
 
 import math
+import re
 from decimal import Decimal
 from pathlib import Path
 
@@ -105,3 +106,15 @@ def plan_str(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         df._jdf.queryExecution(), "formatted"
     )
+
+
+def unpartitioned_window_orders(plan: str) -> list[str]:
+    """First column of every UNPARTITIONED windowspec in a ``plan_str``
+    plan (the spec opens directly with `col ASC/DESC` instead of
+    partition columns)."""
+    out = []
+    for spec in re.findall(r"windowspecdefinition\(([^)]*)", plan):
+        first = spec.split(",")[0].strip()
+        if " ASC" in first or " DESC" in first:
+            out.append(re.sub(r"#\d+L?", "", first.split(" ")[0]))
+    return out

@@ -54,7 +54,7 @@ def test_hitter_integration_join_semantics(spark):
     assert out[4]["opponent_avg"] is None  # C3 missing split
     assert out[1]["stadium_avg"] == 0.28
     assert out[4]["stadium_avg"] is None  # C4 missing split
-    assert out[1]["recent_games_file_path"] == "/data/hitter/2025-05-21/1.csv"
+    assert out[1]["recent_games_file_path"] == "/data/hitter/id_bucket=1"
 
 
 def test_pitcher_role_filter(spark):

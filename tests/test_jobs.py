@@ -5,6 +5,8 @@ checking write semantics per table (overwrite / upsert / append)."""
 
 from __future__ import annotations
 
+import datetime
+import os
 import tempfile
 
 import pytest
@@ -58,11 +60,9 @@ def test_unknown_stage_fails_loudly(spark, data_dir):
         run_stage(spark, "nope", data_dir)
 
 
-def test_game_day_stages_run_end_to_end(spark, data_dir):
-    """park_adjusted and hitter_records consume earlier stages' outputs
-    plus the landed lineup/split tables — the full 041→050 path."""
-    import datetime
-
+def _land_game_day(spark, data_dir):
+    """The landed lineup and hitter split tables of one game day (kim is
+    hitter 1, choi hitter 4); ``hitter_games`` lands separately."""
     spark.createDataFrame(
         [
             (datetime.date(2025, 5, 21), "kim", "T1", 3, "T2", "A"),
@@ -77,10 +77,23 @@ def test_game_day_stages_run_end_to_end(spark, data_dir):
     spark.createDataFrame(
         [(1, "A", 0.28)], "hitter_id int, stadium string, avg double"
     ).write.parquet(f"{data_dir}/hitter_stadiums.parquet")
-    spark.createDataFrame(
+
+
+def _land_hitter_games(spark, data_dir, rows):
+    spark.createDataFrame(rows, "hitter_id int, game_date date, hits int").write.parquet(
+        f"{data_dir}/hitter_games.parquet"
+    )
+
+
+def test_game_day_stages_run_end_to_end(spark, data_dir):
+    """park_adjusted and hitter_records consume earlier stages' outputs
+    plus the landed lineup/split tables — the full 041→050 path."""
+    _land_game_day(spark, data_dir)
+    _land_hitter_games(
+        spark,
+        data_dir,
         [(1, datetime.date(2025, 5, 20), 2), (1, datetime.date(2025, 5, 19), 1)],
-        "hitter_id int, game_date date, hits int",
-    ).write.parquet(f"{data_dir}/hitter_games.parquet")
+    )
 
     run_stage(spark, "park_factor", data_dir)
     run_stage(spark, "hitter_woba", data_dir)
@@ -97,6 +110,36 @@ def test_game_day_stages_run_end_to_end(spark, data_dir):
     # append semantics: a second run doubles the rows (reference A9)
     run_stage(spark, "hitter_records", data_dir)
     assert spark.read.parquet(f"{data_dir}/hitter_records").count() == 4
+
+
+def test_records_retry_after_failed_export_appends_once(spark, data_dir):
+    """An Airflow retry of a records stage whose recent-games export
+    failed appends the night once, and every recorded
+    ``recent_games_file_path`` is the export directory holding that
+    player's rows."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import functions as F
+
+    _land_game_day(spark, data_dir)
+    run_stage(spark, "hitter_woba", data_dir)
+    with pytest.raises(AnalysisException):
+        run_stage(spark, "hitter_records", data_dir)  # hitter_games not landed
+    assert not os.path.exists(f"{data_dir}/hitter_records")
+
+    # ids 4 and 12 share bucket 4: a path naming the raw id would miss
+    games = [(1, datetime.date(2025, 5, 20), 2), (12, datetime.date(2025, 5, 20), 0)]
+    games += [(4, datetime.date(2025, 5, d), 1) for d in range(13, 20)]
+    _land_hitter_games(spark, data_dir, games)
+    run_stage(spark, "hitter_records", data_dir)
+    rec = spark.read.parquet(f"{data_dir}/hitter_records").collect()
+    assert len(rec) == 2
+    for r in rec:
+        path = r["recent_games_file_path"]
+        assert os.path.isdir(path), path
+        mine = spark.read.csv(path, header=True).filter(
+            F.col("hitter_id") == r["hitter_id"]
+        )
+        assert mine.count() == min(5, sum(g[0] == r["hitter_id"] for g in games))
 
 
 def _spark_jobs(spark, fn):
@@ -183,8 +226,6 @@ def test_target_rewritten_behind_marker_merges_again(spark, data_dir):
 def test_remerge_without_marker_leaves_table_unchanged(spark, data_dir, damage):
     """Merge re-run idempotence, and a marker cut short by a crash reads
     as absent instead of failing every later call."""
-    import os
-
     from airflow_baseball_spark.operators.upsert import MARKER, read_marker
 
     target = f"{data_dir}/hitter_metrics"

@@ -1,13 +1,11 @@
-"""Orchestration tests: chain topology validity, in-process run_chain
-over domain fixtures, Airflow gating."""
+"""Orchestration tests: chain topology validity, stage declarations,
+Airflow gating."""
 
 from __future__ import annotations
 
 import pytest
 
 from airflow_baseball_spark.pipelines import orchestration as orch
-
-from test_domain_golden import _hitters  # reuse domain fixtures
 
 
 def test_chain_validates():
@@ -26,24 +24,6 @@ def test_chain_matches_reference_topology():
         "land_five_innings",
     }
     assert next(s for s in orch.STAGES if s.name == "schedule_lineup").event_time
-
-
-def test_run_chain_produces_derived_tables(spark):
-    games = spark.createDataFrame(
-        [("A", 5, 3), ("A", 2, 2), ("B", 1, 0), ("C", 4, 6)],
-        "stadium string, home_score int, away_score int",
-    )
-    pitchers = spark.createDataFrame(
-        [(1, "5 2/3", 10, 3, 1, "3.50"), (2, "0", 0, 0, 0, "-")],
-        "pitcher_id int, ip string, so int, bb int, hr int, era string",
-    )
-    out = orch.run_chain(
-        spark,
-        {"game_records": games, "hitters": _hitters(spark), "pitchers": pitchers},
-    )
-    assert out["park_factor"].count() == 3
-    assert set(out["hitter_metrics"].columns) >= {"hitter_id", "wOBA", "wRC"}
-    assert out["pitcher_metrics"].count() == 2
 
 
 def test_airflow_factory_gated():

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import re
 
-from tests.oracle_harness import plan_str as _plan
+from tests.oracle_harness import plan_str as _plan, unpartitioned_window_orders
 
 SF = "/root/testdata/sf0.001"
 
@@ -20,20 +20,9 @@ SF = "/root/testdata/sf0.001"
 _BUCKET_COLS = {"b", "_b", "blk", "decile"}
 
 
-def _unpartitioned_window_orders(plan: str) -> list[str]:
-    """First column of every UNPARTITIONED windowspec (the spec opens
-    directly with `col ASC/DESC` instead of partition columns)."""
-    out = []
-    for spec in re.findall(r"windowspecdefinition\(([^)]*)", plan):
-        first = spec.split(",")[0].strip()
-        if " ASC" in first or " DESC" in first:
-            out.append(re.sub(r"#\d+L?", "", first.split(" ")[0]))
-    return out
-
-
 def _assert_only_bucket_global_windows(plan: str) -> None:
     bad = [
-        c for c in _unpartitioned_window_orders(plan) if c not in _BUCKET_COLS
+        c for c in unpartitioned_window_orders(plan) if c not in _BUCKET_COLS
     ]
     assert not bad, f"fact-sized unpartitioned window(s) over: {bad}"
 
@@ -93,7 +82,7 @@ def test_peak_concurrency_two_level_sweep(spark):
     # load-DESC window would appear as an unpartitioned spec over
     # `load`, which the assertion above already forbids
     assert "row_number" not in plan or "load" not in "".join(
-        _unpartitioned_window_orders(plan)
+        unpartitioned_window_orders(plan)
     )
 
 

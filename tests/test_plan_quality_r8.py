@@ -18,9 +18,7 @@ tables) are allowed everywhere: {"b", "_b", "blk", "decile"}.
 
 from __future__ import annotations
 
-import re
-
-from tests.oracle_harness import plan_str as _plan
+from tests.oracle_harness import plan_str as _plan, unpartitioned_window_orders
 
 SF = "/root/testdata/sf0.001"
 
@@ -142,15 +140,6 @@ _ALLOWED = {
 }
 
 
-def _unpartitioned_window_orders(plan: str) -> list[str]:
-    out = []
-    for spec in re.findall(r"windowspecdefinition\(([^)]*)", plan):
-        first = spec.split(",")[0].strip()
-        if " ASC" in first or " DESC" in first:
-            out.append(re.sub(r"#\d+L?", "", first.split(" ")[0]))
-    return out
-
-
 def test_registry_wide_no_unapproved_global_windows(spark):
     from airflow_baseball_spark import registry
 
@@ -164,7 +153,7 @@ def test_registry_wide_no_unapproved_global_windows(spark):
         cols = sorted(
             {
                 c
-                for c in _unpartitioned_window_orders(plan)
+                for c in unpartitioned_window_orders(plan)
                 if c not in _BUCKET_COLS
             }
         )

@@ -146,10 +146,10 @@ def test_stream_dedup_dedups_across_batches(spark, replay_dir):
 def test_stream_upsert_converges_across_batches(spark, replay_dir, tmp_path):
     """foreachBatch CDC-apply over micro-batches must land the same
     final table as one global keep-latest — associativity of the
-    version_wins merge, the property the oracle check relies on.
+    version-column merge, the property the oracle check relies on.
     The replay deliberately delivers an OUT-OF-ORDER batch (user 100's
     oldest event arrives last): batch-wins semantics would regress the
-    stored row; version_wins must not."""
+    stored row; the version-column merge must not."""
     import shutil
 
     from airflow_baseball_spark.operators.upsert import merge_upsert, upsert_dataframe
@@ -176,7 +176,6 @@ def test_stream_upsert_converges_across_batches(spark, replay_dir, tmp_path):
             target,
             keys=["user_id"],
             version_col="ts",
-            version_wins=True,
         )
 
     q = (

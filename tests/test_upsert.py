@@ -125,26 +125,16 @@ def test_empty_dir_target_treated_as_missing(spark):
 
 def test_version_wins_merge_resists_stale_batches(spark):
     """CDC keep-latest: a batch carrying an OLDER version for a stored
-    key must not regress the row; batch-wins (the default) must — each
-    mode matching its documented contract."""
+    key must not regress the row; batch-wins (no version column) must —
+    each mode matching its documented contract."""
     with tempfile.TemporaryDirectory() as d:
         path = f"{d}/t"
         fresh = spark.createDataFrame([(1, 10, "new")], "id int, v int, s string")
-        merge_upsert(spark, fresh, path, keys=["id"], version_col="v",
-                     version_wins=True)
+        merge_upsert(spark, fresh, path, keys=["id"], version_col="v")
         stale = spark.createDataFrame([(1, 5, "old"), (2, 1, "b")],
                                       "id int, v int, s string")
-        merge_upsert(spark, stale, path, keys=["id"], version_col="v",
-                     version_wins=True)
-        assert _collect(spark.read.parquet(path)) == {(1, 10, "new"), (2, 1, "b")}
-        # default mode: the applied batch wins regardless of version
         merge_upsert(spark, stale, path, keys=["id"], version_col="v")
+        assert _collect(spark.read.parquet(path)) == {(1, 10, "new"), (2, 1, "b")}
+        # no version column: the applied batch wins regardless of version
+        merge_upsert(spark, stale, path, keys=["id"])
         assert _collect(spark.read.parquet(path)) == {(1, 5, "old"), (2, 1, "b")}
-
-
-def test_version_wins_rejects_columnwise(spark):
-    with tempfile.TemporaryDirectory() as d:
-        upd = spark.createDataFrame([(1, 1)], "id int, v int")
-        with pytest.raises(ValueError, match="update_cols"):
-            merge_upsert(spark, upd, f"{d}/t", keys=["id"], version_col="v",
-                         version_wins=True, update_cols=["v"])
