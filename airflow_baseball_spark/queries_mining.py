@@ -2557,7 +2557,7 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge list); within-edges are two broadcast-able label lookups on
     the brand²-bounded edge table; degrees re-aggregate it. Nothing
     here exceeds the brand-vocabulary size at any SF."""
-    edges = _above_avg_edges(spark, sf_dir).localCheckpoint()
+    edges = _above_avg_edges(spark, sf_dir)
     labels = q_label_propagation(spark, sf_dir).select("v", "lbl")
     la = labels.select(F.col("v").alias("brand_a"), F.col("lbl").alias("la"))
     lb = labels.select(F.col("v").alias("brand_b"), F.col("lbl").alias("lb"))
@@ -2691,7 +2691,7 @@ def q_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangle counted once per edge), localCheckpoint'ed so round r+1
     doesn't re-derive round r's join tree. Output: surviving edges
     with their final-set support — all integer."""
-    edges = _above_avg_edges(spark, sf_dir).localCheckpoint()
+    edges = _above_avg_edges(spark, sf_dir)
 
     def support(e: DataFrame) -> DataFrame:
         sym = e.select(

@@ -14,8 +14,9 @@ splits on "6.0" vs "6". The v2 probes — all pure-BIGINT SUM surfaces,
 chosen deliberately so "a red can never be blamed on float hash
 normalization" — were therefore the one shape guaranteed to go red,
 measuring their own fetch path instead of the read layer. Full
-evidence and the fix (registry._debigint_all, the automatic
-CAST-to-BIGINT oracle rewrite) in PERF_NOTES.md r9; local replica in
+evidence and the fix (registry.oracle_sql's automatic CAST-to-BIGINT
+oracle rewrite: one DESCRIBE against the static DDL per distinct
+oracle text, memoized) in PERF_NOTES.md r9; local replica in
 tests/driver_sim.py, which reproduces the r8 window 50/50 with raw
 oracles and 0/50 red with wrapped ones.
 

@@ -47,10 +47,12 @@ mechanism (DuckDB HUGEINT from integer SUMs degrading to float64 in
 the driver's dtype-preserving oracle fetch — PERF_NOTES.md r9), and
 the r9 driver window confirmed it live (bare SUM(int) probe red, its
 CAST-AS-BIGINT twin green). ``oracle_sql()`` rewrites any HUGEINT
-output column to an explicit BIGINT cast (``_debigint_all`` below);
-since r10 the designed-red bare probe is retired (mechanism pinned in
-tests/test_driver_sim.py) and the panel keeps only a const control,
-the cast sentinel, and the duplicate-key audit.
+output column to an explicit BIGINT cast: one DESCRIBE against the
+static DDL per distinct oracle text, memoized by that text
+(``_DEBIGINT_WRAPPED`` below). Since r10 the designed-red bare probe
+is retired (mechanism pinned in tests/test_driver_sim.py) and the
+panel keeps only a const control, the cast sentinel, and the
+duplicate-key audit.
 """
 
 from __future__ import annotations
@@ -107,6 +109,23 @@ _TS_NORM_CTES = {
 }
 
 
+def _code_start(sql: str) -> int:
+    """Offset of the first character of sql that is not whitespace,
+    a -- line comment or a /* */ block comment (len(sql) when there
+    is none)."""
+    i = 0
+    while True:
+        i += re.match(r"\s*", sql[i:]).end()
+        if sql.startswith("--", i):
+            nl = sql.find("\n", i)
+            i = len(sql) if nl < 0 else nl + 1
+        elif sql.startswith("/*", i):
+            end = sql.find("*/", i)
+            i = len(sql) if end < 0 else end + 2
+        else:
+            return i
+
+
 def _tz_normalize_oracle(sql: str) -> str:
     needed = [
         cte
@@ -120,16 +139,7 @@ def _tz_normalize_oracle(sql: str) -> str:
     # WITH match — an oracle beginning with a SQL comment would
     # otherwise be rewritten into `WITH <ctes>, <comment> WITH ...`,
     # which is invalid SQL that fails at driver time, not here.
-    s = sql.lstrip()
-    while True:
-        if s.startswith("--"):
-            nl = s.find("\n")
-            s = "" if nl < 0 else s[nl + 1 :].lstrip()
-        elif s.startswith("/*"):
-            end = s.find("*/")
-            s = "" if end < 0 else s[end + 2 :].lstrip()
-        else:
-            break
+    s = sql[_code_start(sql) :]
     m = re.match(r"(?is)^(WITH\s+RECURSIVE|WITH)\b", s)
     if m:
         return f"    {m.group(1)} {prefix},\n    {s[m.end():].lstrip()}"
@@ -151,8 +161,8 @@ def _tz_normalize_oracle(sql: str) -> str:
 # of its lineitem-scanning base CTE, sssp_bounded at 508, katz_3step
 # at 400 (PERF_NOTES r11 addendum #2). Rather than hand-hinting 80+
 # texts, the fix lives at this seam (the same architecture as
-# _tz_normalize_oracle and _debigint_all): parse the WITH list,
-# propagate inline-copy counts through the CTE dependency DAG
+# _tz_normalize_oracle and oracle_sql's HUGEINT rewrite): parse the
+# WITH list, propagate inline-copy counts through the CTE dependency DAG
 # (already-MATERIALIZED CTEs are evaluate-once barriers), and insert
 # `AS MATERIALIZED` on every CTE whose copy count reaches
 # _MATERIALIZE_THRESHOLD. Semantics are unchanged — the hint only
@@ -221,20 +231,8 @@ def _parse_ctes(sql: str):
 
     # only a STATEMENT-LEADING WITH counts (after leading whitespace /
     # comments): a WITH inside a subquery must not be parsed as the
-    # top-level CTE list. Leading comments are stripped the same way
-    # _tz_normalize_oracle does.
-    lead = 0
-    while True:
-        ws = re.match(r"\s*", sql[lead:])
-        lead += ws.end()
-        if sql.startswith("--", lead):
-            nl = sql.find("\n", lead)
-            lead = len(sql) if nl < 0 else nl + 1
-        elif sql.startswith("/*", lead):
-            end = sql.find("*/", lead)
-            lead = len(sql) if end < 0 else end + 2
-        else:
-            break
+    # top-level CTE list.
+    lead = _code_start(sql)
     m = re.match(r"(?is)WITH\s+(?:RECURSIVE\s+)?", sql[lead:])
     if not m:
         return [], 0
@@ -374,48 +372,10 @@ def register(name: str, fn: Callable[[SparkSession, str], DataFrame], sql: str |
     # diagnostic probes (queries_probes.py) must read the RAW views —
     # measuring the un-normalized driver environment is their entire
     # job, so shadowing their inputs would blind the instrument panel
-    global _DEBIGINT_READY
     if sql and not name.startswith("probe_"):
         sql = _tz_normalize_oracle(sql)
         sql = _materialize_hot_ctes(sql)
     _REGISTRY[name] = (fn, sql)
-    # registration-time HUGEINT protection (r9 verdict item #5): a
-    # registration arriving AFTER the first oracle_sql() call must not
-    # miss the already-latched rewrite pass and ship a bare HUGEINT
-    # emitter. While the latch is up, rewrap ONLY the new name (the
-    # cache is keyed by name, so one DESCRIBE suffices — r10 ADVICE
-    # item #2 replaced the unconditional latch-drop that re-DESCRIBEd
-    # all 552 oracles per late registration); popping first keeps a
-    # RE-registration from resurrecting a stale wrap. Any failure
-    # falls back to dropping the latch so the full rebuild — with its
-    # static-DDL retry and failure ledger — handles the name.
-    if _DEBIGINT_READY:
-        _DEBIGINT_CACHE.pop(name, None)
-        # a RE-registration that fixes a previously DESCRIBE-failing
-        # oracle must also clear its stale entry on the failure
-        # ledger, or the pytest gate asserting the ledger empty reds
-        # on a name that is now wrapped correctly
-        while name in _DEBIGINT_DESCRIBE_FAILURES:
-            _DEBIGINT_DESCRIBE_FAILURES.remove(name)
-        if sql is not None and name not in _DEBIGINT_EXEMPT:
-            try:
-                # static DDL, not the parquet probe: one late
-                # registration needs one DESCRIBE, and the static
-                # types are footer-identical (pinned by
-                # test_static_ddl_types_match_parquet_footers) —
-                # any mismatch still drops the latch below and the
-                # full rebuild re-covers the name
-                con = _debigint_static_connection()
-                try:
-                    wrapped = _debigint_oracle(con, sql)
-                finally:
-                    con.close()
-                if wrapped is not sql:
-                    _DEBIGINT_CACHE[name] = wrapped
-            except Exception:
-                _DEBIGINT_READY = False
-    else:
-        _DEBIGINT_READY = False
 
 
 # ---------------------------------------------------------------------------
@@ -440,13 +400,13 @@ def register(name: str, fn: Callable[[SparkSession, str], DataFrame], sql: str |
 # Values are unaffected — the house style already keeps every integer
 # surface < 2^63 by construction (mod-prime checksums, micro/cent
 # quantization). Output types are discovered by DESCRIBE against
-# schema-only views (parquet footers when a testdata dir is present,
-# else the static DDL below), so the rewrite is exact, idempotent
-# (a cast column DESCRIBEs as BIGINT), and applies automatically to
-# every current and future registration.
+# schema-only tables built from the static DDL below, so the rewrite
+# is exact, idempotent (a cast column DESCRIBEs as BIGINT), needs no
+# data dir, and applies automatically to every current and future
+# registration.
 
-# static schema fallback (generated from the driver testdata parquet
-# footers at sf0.001) — lets the wrapper run without any data dir
+# the driver testdata schema (generated from its parquet footers at
+# sf0.001; tests/test_driver_sim.py pins it against every testdata dir)
 _TESTDATA_DDL = {
     "region": "r_regionkey INTEGER, r_name VARCHAR",
     "nation": "n_nationkey INTEGER, n_name VARCHAR, n_regionkey INTEGER",
@@ -460,64 +420,24 @@ _TESTDATA_DDL = {
     "embeddings": "vec_id BIGINT, embedding FLOAT[], label INTEGER",
 }
 
-# deliberate HUGEINT emitters (instrument controls) skip the rewrite.
-# Empty since r10: probe_hugeint_bare — the designed-red positive
-# control that proved the mechanism from the driver's own r9 window —
-# is retired (the finding is pinned by tests/test_driver_sim.py with
-# an inline bare-SUM oracle, and by the committed r9 artifacts), so
-# every shipped oracle now fetches portably under every fetch path.
-_DEBIGINT_EXEMPT: frozenset[str] = frozenset()
+# oracle text -> that text with its HUGEINT columns cast to BIGINT
+# (the text itself when it has none), or None when its DESCRIBE
+# failed. Keyed by text, not name, so a re-registered name is a new
+# key and no entry can go stale; a late registration costs one
+# DESCRIBE on the next oracle_sql() call.
+_DEBIGINT_WRAPPED: dict[str, str | None] = {}
 
-_DEBIGINT_CACHE: dict[str, str] = {}
-_DEBIGINT_READY = False
-
-# oracles whose DESCRIBE failed during _debigint_all — such an oracle
-# would ship unwrapped (HUGEINT intact if it has one), which is
-# exactly the failure mode the rewrite exists to prevent, so the
+# names whose oracle failed DESCRIBE in the last oracle_sql() call —
+# such an oracle ships unwrapped (HUGEINT intact if it has one), which
+# is exactly the failure mode the rewrite exists to prevent, so the
 # names are surfaced here and asserted empty by the pytest gate
-# (tests/test_driver_sim.py) instead of dying at the driver seam
-# (r9 ADVICE item #2).
+# (tests/test_driver_sim.py) instead of dying at the driver seam.
 _DEBIGINT_DESCRIBE_FAILURES: list[str] = []
 
 
-def _debigint_connection():
-    import os
-    from pathlib import Path
-
-    import duckdb
-
-    for cand in (
-        os.environ.get("SPARK_GRAFT_SF_DIR"),
-        "/root/testdata/sf0.001",
-        "/root/testdata/sf0.01",
-        "/root/testdata/sf0.1",
-    ):
-        if cand and Path(cand).is_dir():
-            ok = True
-            for t in _TESTDATA_DDL:
-                p = Path(cand) / f"{t}.parquet"
-                if not p.exists():
-                    ok = False
-                    break
-            if ok:
-                con = duckdb.connect()
-                for t in _TESTDATA_DDL:
-                    p = Path(cand) / f"{t}.parquet"
-                    con.execute(
-                        f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-                    )
-                return con
-    # no testdata dir: the schema-only fallback IS the static-DDL
-    # connection — one definition, so the DDL cannot silently diverge
-    # from the retry target (r11 review)
-    return _debigint_static_connection()
-
-
 def _debigint_static_connection():
-    """Schema-only connection built from the static DDL, bypassing the
-    parquet probe — the retry target when a DESCRIBE fails against the
-    parquet-backed views (r10 ADVICE item #3: a footer/view quirk in
-    one environment must not ship a HUGEINT emitter unwrapped)."""
+    """Schema-only DuckDB connection with one empty table per
+    testdata table, built from the static DDL."""
     import duckdb
 
     con = duckdb.connect()
@@ -555,75 +475,42 @@ def _debigint_oracle(con, sql: str) -> str:
     )
 
 
-def _debigint_all() -> None:
-    global _DEBIGINT_READY
-    if _DEBIGINT_READY:
-        return
-    # full rebuild: the latch is invalidated by register(), so the
-    # cache may describe a superseded surface — clear both so stale
-    # entries for re-registered or removed names cannot leak through
-    # oracle_sql()'s out.update(_DEBIGINT_CACHE)
-    _DEBIGINT_CACHE.clear()
-    _DEBIGINT_DESCRIBE_FAILURES.clear()
-    con = _debigint_connection()
-    static_con = None
-    try:
-        for name, (fn, sql) in _REGISTRY.items():
-            if sql is None or name in _DEBIGINT_EXEMPT:
-                continue
-            try:
-                wrapped = _debigint_oracle(con, sql)
-            except Exception:
-                # a DESCRIBE failure against the parquet-backed views
-                # is retried once against the static-DDL fallback (r10
-                # ADVICE item #3 — the types are footer-identical, so
-                # a view/footer quirk in one environment cannot ship a
-                # HUGEINT emitter unwrapped); only if BOTH fail does
-                # the original text ship, with the name recorded so
-                # the pytest gate flags it instead of the failure
-                # staying silent (r9 ADVICE item #2).
-                try:
-                    if static_con is None:
-                        static_con = _debigint_static_connection()
-                    wrapped = _debigint_oracle(static_con, sql)
-                except Exception:
-                    _DEBIGINT_DESCRIBE_FAILURES.append(name)
-                    continue
-            if wrapped is not sql:
-                _DEBIGINT_CACHE[name] = wrapped
-    finally:
-        con.close()
-        if static_con is not None:
-            static_con.close()
-    _DEBIGINT_READY = True
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     _load()
     return {k: v[0] for k, v in _REGISTRY.items()}
 
 
 def oracle_sql(raw: bool = False) -> dict[str, str]:
-    """Oracle SQL per query. Default path applies the r9 HUGEINT
-    rewrite (see _debigint_all); ``raw=True`` returns the registered
-    text unmodified (oracle-composition and driver-simulation use).
-
-    Calls that re-enter during module import (oracle composition at
-    registration time, e.g. queries_timeseries._strength_sql) see the
-    raw text: the registry is only partially populated mid-load, so
-    running — and latching — the HUGEINT rewrite there would freeze a
-    wrap cache that misses every later-registered query (r9 bug)."""
+    """Oracle SQL per query. The default path casts every HUGEINT
+    output column to BIGINT (see _debigint_oracle), DESCRIBEing each
+    distinct text once against the static DDL; ``raw=True`` returns
+    the registered text unmodified (oracle-composition and
+    driver-simulation use)."""
     _load()
     out = {k: v[1] for k, v in _REGISTRY.items() if v[1] is not None}
-    if raw or _LOADING:
+    if raw:
         return out
-    _debigint_all()
-    out.update(_DEBIGINT_CACHE)
-    return out
+    todo = [
+        sql for sql in dict.fromkeys(out.values())
+        if sql not in _DEBIGINT_WRAPPED
+    ]
+    if todo:
+        con = _debigint_static_connection()
+        try:
+            for sql in todo:
+                try:
+                    _DEBIGINT_WRAPPED[sql] = _debigint_oracle(con, sql)
+                except Exception:
+                    _DEBIGINT_WRAPPED[sql] = None
+        finally:
+            con.close()
+    _DEBIGINT_DESCRIBE_FAILURES[:] = [
+        k for k, sql in out.items() if _DEBIGINT_WRAPPED[sql] is None
+    ]
+    return {k: _DEBIGINT_WRAPPED[sql] or sql for k, sql in out.items()}
 
 
 _LOADED = False
-_LOADING = False
 
 # Registry order is the driver's correctness-check order, and the
 # driver checks only the first ~50 entries, so _PRIORITY declares that
@@ -699,10 +586,9 @@ def _load() -> None:
     move the _PRIORITY window to the front. The sort is stable, so
     every other query keeps its registration order: module import
     order below, then definition order within a module."""
-    global _LOADED, _LOADING
+    global _LOADED
     if _LOADED:
         return
-    _LOADING = True
     from airflow_baseball_spark import (  # noqa: F401
         queries_core,
         queries_domain,
@@ -740,4 +626,3 @@ def _load() -> None:
     _REGISTRY.clear()
     _REGISTRY.update(ordered)
     _LOADED = True
-    _LOADING = False

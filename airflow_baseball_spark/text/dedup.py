@@ -66,18 +66,6 @@ _PERMS: list[tuple[int, int]] = [
 N_BANDS = 4
 
 
-def shingles(df: DataFrame, text_col: str, id_col: str, n: int = 5) -> DataFrame:
-    """(id, shingle) rows — distinct character n-grams per document."""
-    pos = F.explode(
-        F.sequence(F.lit(1), F.greatest(F.length(text_col) - (n - 1), F.lit(1)))
-    ).alias("pos")
-    return (
-        spread(df).select(F.col(id_col), F.col(text_col), pos)
-        .select(F.col(id_col), F.expr(f"substring({text_col}, pos, {n})").alias("sh"))
-        .distinct()
-    )
-
-
 def shingle_code_arrays(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

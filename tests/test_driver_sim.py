@@ -20,6 +20,8 @@ DRIVER_SIM_r9_postfix.txt (wrapped, 0/50 red).
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from tests.driver_sim import compare_driverish
@@ -40,11 +42,10 @@ def test_no_hugeint_in_any_wrapped_oracle(con):
     every shipped oracle; NONE may emit HUGEINT (the designed-red
     control probe_hugeint_bare was retired in r10, so the offender
     list must be empty). A failure here means a new registration SUMs
-    integers without the registry rewrite catching it (e.g.
-    registered after the first oracle_sql() call latched the cache).
-    Also asserts no DESCRIBE silently failed during the rewrite pass
-    (r9 ADVICE item #2) — a DESCRIBE failure ships the oracle
-    unwrapped, exactly the hole the rewrite exists to close."""
+    integers without the registry rewrite catching it. Also asserts
+    no DESCRIBE silently failed during the rewrite pass (r9 ADVICE
+    item #2) — a DESCRIBE failure ships the oracle unwrapped, exactly
+    the hole the rewrite exists to close."""
     sqls = registry.oracle_sql()
     offenders = []
     for name, sql in sqls.items():
@@ -129,67 +130,125 @@ def test_static_ddl_fallback_detects_hugeint():
     assert [t for _, t, *_ in desc2] == ["BIGINT"]
 
 
-def test_static_ddl_types_match_parquet_footers():
-    """The premise behind both the DESCRIBE-failure retry and the
-    incremental late-registration wrap (which DESCRIBEs against the
-    static DDL only, r11): the embedded static DDL and the parquet
-    footers must agree on every column name and type, or the two
-    DESCRIBE environments could disagree on a wrap decision. Compare
-    DESCRIBE per table across the two connection builders."""
-    from pathlib import Path
+_REPO = Path(__file__).resolve().parents[1]
 
-    import pytest
+# nstz stores its three timestamp columns tz-tagged on purpose (the
+# oracle-side _TS_NORM_CTES normalize them back to naive UTC); a
+# tz-tagged timestamp never DESCRIBEs as HUGEINT, so the difference
+# cannot change a wrap decision.
+_NSTZ_TYPES = {
+    ("orders", "o_orderdate"): "TIMESTAMP WITH TIME ZONE",
+    ("lineitem", "l_shipdate"): "TIMESTAMP WITH TIME ZONE",
+    ("events", "ts"): "TIMESTAMP WITH TIME ZONE",
+}
 
-    sf = Path("/root/testdata/sf0.001")
+
+@pytest.mark.parametrize(
+    "sf, expected_diff",
+    [
+        pytest.param(sf, diff, id=sf.name)
+        for sf, diff in [
+            (Path(SF), {}),
+            (Path(SF).parent / "sf0.01", {}),
+            (Path(SF).parent / "sf0.1", {}),
+            (_REPO / "testdata_variants/sf0.001_driverish", {}),
+            (_REPO / "testdata_variants/sf0.001_nstz", _NSTZ_TYPES),
+        ]
+    ],
+)
+def test_static_ddl_types_match_parquet_footers(sf, expected_diff):
+    """The premise behind DESCRIBEing every oracle against the static
+    DDL only: it agrees with the parquet footers of each testdata dir
+    on every column name and type (save nstz's intended tz-tagged
+    timestamps), so a wrap decision cannot depend on which data the
+    driver reads. Compare DESCRIBE per table across the two."""
     if not sf.is_dir():
-        pytest.skip("testdata sf0.001 not present")
+        pytest.skip(f"{sf} not present")
     import duckdb
 
     pq = duckdb.connect()
-    for t in registry._TESTDATA_DDL:
-        pq.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf / (t + '.parquet')}')"
-        )
     st = registry._debigint_static_connection()
     try:
         for t in registry._TESTDATA_DDL:
-            a = [(c, ty) for c, ty, *_ in pq.execute(f"DESCRIBE {t}").fetchall()]
-            b = [(c, ty) for c, ty, *_ in st.execute(f"DESCRIBE {t}").fetchall()]
-            assert a == b, f"{t}: parquet footers {a} != static DDL {b}"
+            a = pq.execute(
+                "DESCRIBE SELECT * FROM "
+                f"read_parquet('{sf / (t + '.parquet')}')"
+            ).fetchall()
+            b = st.execute(f"DESCRIBE {t}").fetchall()
+            want = [(c, expected_diff.get((t, c), ty)) for c, ty, *_ in b]
+            got = [(c, ty) for c, ty, *_ in a]
+            assert got == want, f"{t}: parquet footers {got} != {want}"
     finally:
         pq.close()
         st.close()
 
 
-def test_late_registration_still_gets_wrapped(con):
+def test_late_registration_still_gets_wrapped(con, monkeypatch):
     """Registration-time HUGEINT protection (r9 verdict item #5): a
     bare SUM(int) oracle registered AFTER oracle_sql() has already
-    latched the rewrite cache must still ship wrapped — register()
-    invalidates the latch, so no registration order can skip the
-    wrap. Quoted-identifier path (r9 ADVICE item #1) is exercised via
-    an alias that needs quoting."""
+    run must still ship wrapped, and costs exactly one DESCRIBE (the
+    memo already holds every other text). Quoted-identifier path (r9
+    ADVICE item #1) is exercised via an alias that needs quoting."""
     from airflow_baseball_spark import queries_probes
 
-    registry.oracle_sql()  # latch the cache first
+    registry.oracle_sql()  # memoize every registered text first
+    calls = []
+    real = registry._debigint_oracle
+
+    def counting(c, sql):
+        calls.append(sql)
+        return real(c, sql)
+
+    monkeypatch.setattr(registry, "_debigint_oracle", counting)
     name = "zz_test_lint_bare_tmp"
     bare = 'SELECT SUM(l_linenumber) AS "sum(x)" FROM lineitem'
     try:
         registry.register(name, queries_probes._linenumber_sum, bare)
         shipped = registry.oracle_sql()[name]
+        assert len(calls) == 1, len(calls)
         assert shipped != bare, "late registration skipped the rewrite"
         desc = con.execute("DESCRIBE " + shipped).fetchall()
         assert [t for _, t, *_ in desc] == ["BIGINT"], desc
     finally:
         registry._REGISTRY.pop(name, None)
-        registry._DEBIGINT_CACHE.pop(name, None)
+
+
+def test_describe_failure_ships_text_and_is_ledgered():
+    """An oracle whose DESCRIBE fails ships as its registered text and
+    is named in the failure ledger; the ledger is rebuilt from the
+    current registry on every call, so re-registering the name with
+    valid text, or removing it, empties it again."""
+    from airflow_baseball_spark import queries_probes
+
+    name = "zz_test_lint_badsql_tmp"
+    bad = "SELECT no_such_column AS s FROM lineitem"
+    try:
+        registry.register(name, queries_probes._linenumber_sum, bad)
+        shipped = registry.oracle_sql()[name]
+        assert shipped == registry.oracle_sql(raw=True)[name]
+        assert registry._DEBIGINT_DESCRIBE_FAILURES == [name]
+        registry.register(
+            name,
+            queries_probes._linenumber_sum,
+            "SELECT SUM(l_linenumber) AS s FROM lineitem",
+        )
+        assert "BIGINT" in registry.oracle_sql()[name]
+        assert registry._DEBIGINT_DESCRIBE_FAILURES == []
+        registry.register(name, queries_probes._linenumber_sum, bad)
+        registry.oracle_sql()
+        assert registry._DEBIGINT_DESCRIBE_FAILURES == [name]
+        registry._REGISTRY.pop(name)
+        registry.oracle_sql()
+        assert registry._DEBIGINT_DESCRIBE_FAILURES == []
+    finally:
+        registry._REGISTRY.pop(name, None)
+        registry.oracle_sql()
 
 
 def test_reregistration_does_not_leak_stale_wrap(con):
-    """The rewrite cache is cleared and rebuilt whenever the latch is
-    invalidated, so RE-registering a name with new SQL (or removing
-    it) cannot leave a stale wrapped oracle that oracle_sql()'s
-    cache-overlay would resurrect."""
+    """The rewrite memo is keyed by oracle text, so RE-registering a
+    name with new SQL (or removing it) cannot leave a stale wrapped
+    oracle behind for that name."""
     from airflow_baseball_spark import queries_probes
 
     name = "zz_test_lint_rereg_tmp"
@@ -206,8 +265,6 @@ def test_reregistration_does_not_leak_stale_wrap(con):
         assert [t for _, t, *_ in desc] == ["BIGINT"], desc
     finally:
         registry._REGISTRY.pop(name, None)
-        registry._DEBIGINT_CACHE.pop(name, None)
-        registry._DEBIGINT_READY = False
 
 
 def test_dup_keys_probe_pins_generation_key_profile(spark, con):
@@ -230,59 +287,3 @@ def test_dup_keys_probe_pins_generation_key_profile(spark, con):
         row["dup_orderkey"],
     ) == (0, 0, 0)
     assert row["dup_lineitem_key"] > 0  # known, audited non-uniqueness
-
-
-def test_late_registration_wraps_incrementally(con):
-    """r10 ADVICE item #2: while the rewrite latch is up, register()
-    must wrap ONLY the new name — one DESCRIBE, latch stays up — not
-    drop the latch and force a full 552-oracle re-DESCRIBE on the
-    next oracle_sql() call."""
-    from airflow_baseball_spark import queries_probes
-
-    registry.oracle_sql()  # latch the cache
-    assert registry._DEBIGINT_READY
-    name = "zz_test_lint_incr_tmp"
-    bare = "SELECT SUM(l_linenumber) AS s FROM lineitem"
-    try:
-        registry.register(name, queries_probes._linenumber_sum, bare)
-        # the incremental path wraps at registration time and keeps
-        # the latch up — oracle_sql() must not need a rebuild
-        assert registry._DEBIGINT_READY, (
-            "register() dropped the latch — incremental rewrap regressed "
-            "to the O(N) full rebuild"
-        )
-        assert name in registry._DEBIGINT_CACHE
-        shipped = registry.oracle_sql()[name]
-        desc = con.execute("DESCRIBE " + shipped).fetchall()
-        assert [t for _, t, *_ in desc] == ["BIGINT"], desc
-    finally:
-        registry._REGISTRY.pop(name, None)
-        registry._DEBIGINT_CACHE.pop(name, None)
-
-
-def test_describe_failure_retries_static_ddl(monkeypatch):
-    """r10 ADVICE item #3: when a DESCRIBE fails against the
-    parquet-backed views, _debigint_all must retry the name against
-    the static-DDL fallback connection before shipping raw text — a
-    view/footer quirk in one environment must not ship a HUGEINT
-    emitter unwrapped. Simulated by pointing the primary connection
-    at an empty database (every DESCRIBE fails there)."""
-    import duckdb
-
-    monkeypatch.setattr(
-        registry, "_debigint_connection", lambda: duckdb.connect()
-    )
-    monkeypatch.setattr(registry, "_DEBIGINT_READY", False)
-    monkeypatch.setattr(registry, "_DEBIGINT_CACHE", {})
-    monkeypatch.setattr(registry, "_DEBIGINT_DESCRIBE_FAILURES", [])
-    registry._debigint_all()
-    # every oracle DESCRIBEs fine against the static DDL, so the
-    # retry must rescue all of them: no recorded failures, and the
-    # HUGEINT emitters are wrapped exactly as on the primary path
-    assert registry._DEBIGINT_DESCRIBE_FAILURES == []
-    assert len(registry._DEBIGINT_CACHE) >= 40  # ~49 HUGEINT rewrites
-    # no manual relatch: monkeypatch teardown runs AFTER the test
-    # body and restores the pre-test (ready, cache, failures) triple
-    # wholesale, so the real path resumes exactly where it was — an
-    # in-body `_DEBIGINT_READY = False` would be overwritten by that
-    # restore (r11 review)

@@ -90,7 +90,6 @@ def test_rank_pick_matches_naive(spark):
     """Property check on the reusable operator itself: rank_pick's
     selected values equal the naive global-sort answer for several
     rank specs on real data."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from airflow_baseball_spark.operators.rank_select import rank_pick

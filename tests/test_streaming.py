@@ -19,7 +19,6 @@ from __future__ import annotations
 import os
 import tempfile
 
-import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq

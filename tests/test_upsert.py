@@ -8,8 +8,6 @@ import tempfile
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from airflow_baseball_spark.operators.upsert import merge_upsert, upsert_dataframe
 
 
