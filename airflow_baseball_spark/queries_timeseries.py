@@ -2560,9 +2560,8 @@ def q_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _strength_sql() -> str:
     from airflow_baseball_spark import registry as _reg
 
-    # raw=True: this runs at registration time (mid-_load), where the
-    # r9 HUGEINT rewrite must not run against a partial registry; the
-    # composed query's own output is wrapped by the top-level pass
+    # raw=True: compose from the registered text; the composed
+    # query's own HUGEINT outputs are cast by oracle_sql() like any other
     decompose_sql = _reg.oracle_sql(raw=True)["seasonal_decompose"]
     return f"""
     WITH dec AS ({decompose_sql}),
