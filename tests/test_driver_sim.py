@@ -183,12 +183,30 @@ def test_static_ddl_types_match_parquet_footers(sf, expected_diff):
         st.close()
 
 
-def test_late_registration_still_gets_wrapped(con, monkeypatch):
+def test_late_registration_still_gets_wrapped(con):
     """Registration-time HUGEINT protection (r9 verdict item #5): a
     bare SUM(int) oracle registered AFTER oracle_sql() has already
-    run must still ship wrapped, and costs exactly one DESCRIBE (the
-    memo already holds every other text). Quoted-identifier path (r9
-    ADVICE item #1) is exercised via an alias that needs quoting."""
+    run must still ship wrapped. Quoted-identifier path (r9 ADVICE
+    item #1) is exercised via an alias that needs quoting."""
+    from airflow_baseball_spark import queries_probes
+
+    registry.oracle_sql()  # memoize every registered text first
+    name = "zz_test_lint_bare_tmp"
+    bare = 'SELECT SUM(l_linenumber) AS "sum(x)" FROM lineitem'
+    try:
+        registry.register(name, queries_probes._linenumber_sum, bare)
+        shipped = registry.oracle_sql()[name]
+        assert shipped != bare, "late registration skipped the rewrite"
+        desc = con.execute("DESCRIBE " + shipped).fetchall()
+        assert [t for _, t, *_ in desc] == ["BIGINT"], desc
+    finally:
+        registry._REGISTRY.pop(name, None)
+
+
+def test_late_registration_wraps_incrementally(con, monkeypatch):
+    """A registration after oracle_sql() has run costs exactly one
+    DESCRIBE on the next call (the memo already holds every other
+    text), not a re-DESCRIBE of every registered oracle."""
     from airflow_baseball_spark import queries_probes
 
     registry.oracle_sql()  # memoize every registered text first
@@ -200,13 +218,12 @@ def test_late_registration_still_gets_wrapped(con, monkeypatch):
         return real(c, sql)
 
     monkeypatch.setattr(registry, "_debigint_oracle", counting)
-    name = "zz_test_lint_bare_tmp"
-    bare = 'SELECT SUM(l_linenumber) AS "sum(x)" FROM lineitem'
+    name = "zz_test_lint_incr_tmp"
+    bare = "SELECT SUM(l_linenumber) AS incr_s FROM lineitem"
     try:
         registry.register(name, queries_probes._linenumber_sum, bare)
         shipped = registry.oracle_sql()[name]
-        assert len(calls) == 1, len(calls)
-        assert shipped != bare, "late registration skipped the rewrite"
+        assert calls == [registry.oracle_sql(raw=True)[name]], calls
         desc = con.execute("DESCRIBE " + shipped).fetchall()
         assert [t for _, t, *_ in desc] == ["BIGINT"], desc
     finally:
